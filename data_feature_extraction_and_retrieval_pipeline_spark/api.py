@@ -75,6 +75,8 @@ class Engine:
         self._hot_gen = 0
         self._hot_table_epoch = None
         self._hot_counts = None
+        # (table epoch, images frame, embedding dim) of the last probe
+        self._dim_probe = None
 
     @property
     def serving_epoch(self) -> tuple:
@@ -339,15 +341,8 @@ class Engine:
             real = loader()
             if real is None and dim is None:
                 # dim lookup only on the stub path (the real encoder
-                # knows its own dim); the hot tier passes its resident
-                # dim, so this Spark job runs only on the cold path
-                first = self.images.select("embedding").first()
-                if first is None:
-                    raise ValueError(
-                        "search_content: images table is empty — no "
-                        "embedding dimension to infer"
-                    )
-                dim = len(first[0])
+                # knows its own dim); the hot tier passes its resident dim
+                dim = self._embedding_dim()
 
         crops = (
             self._segment_payload(payload, max_segments=max_segments)
@@ -382,12 +377,28 @@ class Engine:
             ]
         return qvec, seg_rows
 
+    def _embedding_dim(self) -> int:
+        """Embedding width of the images table: taken from the hot
+        build, else one Spark probe, either reused until the tables
+        change (table epoch or a rebound ``images`` frame)."""
+        probe = self._dim_probe
+        if probe and probe[0] == self._table_epoch and probe[1] is self.images:
+            return probe[2]
+        first = self.images.select("embedding").first()
+        if first is None:
+            raise ValueError(
+                "search_content: images table is empty — no "
+                "embedding dimension to infer"
+            )
+        self._dim_probe = (self._table_epoch, self.images, len(first[0]))
+        return self._dim_probe[2]
+
     # -- hot serving tier (serving.py — the ES-parity resident index) --
 
     def hot(self, rebuild: bool | str = False, path: str | None = None):
         """The driver-resident :class:`~.serving.HotSearchIndex` built
-        from this engine's tables (cached). One bounded Spark collect
-        per table — the hot tier's index-build step.
+        from this engine's tables (cached). One bounded Arrow collect
+        (``toArrow()``) per table — the hot tier's index-build step.
 
         ``rebuild``: ``True`` forces a rebuild from the current tables;
         ``"auto"`` rebuilds only when :meth:`hot_stale` says the cached
@@ -421,6 +432,8 @@ class Engine:
                 cached = HotSearchIndex.from_engine(self)
                 if path is not None:
                     cached.save(path)
+                if cached.dim:
+                    self._dim_probe = (self._table_epoch, self.images, cached.dim)
             # snapshot counts from the artifact itself (works for both
             # built and loaded copies) — the probe=True staleness check
             # compares live table counts against these
@@ -653,6 +666,22 @@ class EventsAnalytics:
 # indexes.BUILD_SECONDS, so the warm numbers' steady-state assumption
 # is auditable for the facade too.
 CHECKPOINT_SECONDS: dict[str, float] = {}
+
+
+def _require_checkpointed(pairs: DataFrame) -> None:
+    """Raise unless ``pairs`` is an eagerly checkpointed frame (its
+    analyzed plan root is a ``LogicalRDD``) — an explicit check, so
+    ``python -O`` keeps it. Skipped where the JVM plan is out of reach
+    (a Spark Connect frame has no ``_jdf``)."""
+    jdf = getattr(pairs, "_jdf", None)
+    if jdf is None:
+        return
+    root = jdf.queryExecution().analyzed().getClass().getSimpleName()
+    if root != "LogicalRDD":
+        raise RuntimeError(
+            "dedup_near: src may only be unpersisted after the pair "
+            f"frame is eagerly checkpointed (got plan root {root})"
+        )
 
 
 class CurationPipeline:
@@ -914,15 +943,9 @@ class CurationPipeline:
         # already materialized, so nothing re-reads src through that
         # path. If the checkpoint were ever made lazy, later
         # executions would recompute the whole upstream chain once
-        # per remaining consumer with no cache. Assert the coupling
+        # per remaining consumer with no cache. Check the coupling
         # instead of relying on statement order alone.
-        _root = (
-            pairs._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        )
-        assert _root == "LogicalRDD", (
-            "dedup_near: src may only be unpersisted after the pair "
-            f"frame is eagerly checkpointed (got plan root {_root})"
-        )
+        _require_checkpointed(pairs)
         caching.unpersist(src)
         lab = label_propagation_canonical(pairs, rounds=3)
         drops = lab.filter(F.col("node") != F.col("canonical")).select(

@@ -12,9 +12,13 @@ trade for 100 TB scans and exactly the wrong one for a 10-result
 lookup a user is waiting on.
 
 :class:`HotSearchIndex` is the ES-parity piece: Spark BUILDS the
-artifact (one bounded collect per serving table — the same "index
-build" step the reference runs when it bulk-loads ES), and request
-scoring runs against the resident copy in microseconds. The score
+artifact (one bounded ``toArrow()`` per serving table — the same
+"index build" step the reference runs when it bulk-loads ES), and
+request scoring runs against the resident copy in microseconds.
+The build is columnar: each vector matrix comes straight from the
+Arrow list column's values buffer, and the tags stay the flat arrays
+of :class:`TagRows`, so tag lookups are numpy masks, not Python loops
+(build cost before/after in SCALING.md "Serving concurrency"). The score
 algebra is the operator layer's, replicated term-for-term (whole
 calibration +1.0, the hybrid 0..2/−1..1 asymmetry with missing→0,
 rounded-score ordering with id tiebreaks) and pinned by equivalence
@@ -24,7 +28,7 @@ path stays the system of record; the hot tier is a view of it.
 Scale posture (the 100 TB story):
 
 - The resident artifact holds ONLY the serving columns — ids +
-  vectors + tag structs — at 8·n·dim bytes of float64 per vector
+  vectors + the flat tag arrays — at 8·n·dim bytes of float64 per vector
   table, or 4·n·dim with a ``save(dtype="float32")`` artifact (the
   source precision: CLIP emits float32). One driver comfortably holds
   ~10M×64d (~5 GB) at float64, ~20M×64d at float32; past that the
@@ -97,10 +101,86 @@ def _topk_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return order[: int(k)]
 
 
+class TagRows:
+    """``segment_tags`` rows (image_id, [(tag, confidence), …]) held as
+    the four flat arrays ``save()`` writes: row ids, per-row pair
+    counts, pair names and confidences (row-major). A pair with a null
+    tag or confidence gets confidence NaN, which clears no floor (as
+    Spark's null comparison). ``len()`` is the row count."""
+
+    def __init__(self, ids, lens, names, confs):
+        self.ids = ids
+        self.lens = np.asarray(lens, dtype=np.int64)
+        self.names = names
+        self.confs = np.asarray(confs, dtype=np.float64)
+        self.pair_ids = np.repeat(ids, self.lens)  # each pair's image id
+        # tag names as codes into the sorted vocabulary: a lookup
+        # compares a few query codes against int codes, not strings
+        self.vocab, self.codes = np.unique(names, return_inverse=True)
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    def hits(self, tags: Sequence[str], min_confidence: float) -> np.ndarray:
+        """Pair mask: tag in ``tags`` at or above the confidence floor."""
+        query = np.asarray([str(t) for t in tags], dtype=str)
+        wanted = np.flatnonzero(np.isin(self.vocab, query))
+        floor = float(min_confidence)
+        return np.isin(self.codes, wanted) & (self.confs >= floor)
+
+    def take(self, row_mask: np.ndarray) -> "TagRows":
+        pair_mask = np.repeat(row_mask, self.lens)
+        return TagRows(
+            self.ids[row_mask], self.lens[row_mask],
+            self.names[pair_mask], self.confs[pair_mask],
+        )
+
+    @classmethod
+    def from_arrow(cls, ids, tags) -> "TagRows":
+        """From the Arrow id and ``array<struct<tag, confidence>>``
+        columns; a null tag list is a row with no pairs."""
+        import pyarrow.compute as pc
+
+        lens = pc.fill_null(pc.list_value_length(tags), 0).to_numpy()
+        pairs = tags.flatten()  # struct nulls pass into the fields
+        fields = dict(zip([f.name for f in pairs.type], pairs.flatten()))
+        name, conf = fields["tag"], fields["confidence"]
+        names = pc.fill_null(name, "").to_numpy(zero_copy_only=False)
+        confs = np.where(
+            name.is_valid().to_numpy(zero_copy_only=False),
+            conf.to_numpy(zero_copy_only=False).astype(np.float64),
+            np.nan,
+        )
+        return cls(_ids(ids), lens, names.astype(str), confs)
+
+
+def _ids(arr) -> np.ndarray:
+    """An Arrow id column as numpy; values numpy holds as objects
+    (strings) take the dtype ``np.asarray`` picks for them."""
+    ids = arr.to_numpy(zero_copy_only=False)
+    return np.asarray(ids.tolist()) if ids.dtype == object else ids
+
+
+def _vectors(arr) -> np.ndarray:
+    """An Arrow ``array<float|double>`` column as an ``(n, dim)`` view
+    of its flat values buffer, in the source dtype. A null or ragged
+    vector (or null element) raises: the view would be mis-shaped."""
+    if not len(arr):
+        return np.zeros((0, 0))
+    lens = np.diff(arr.offsets.to_numpy())
+    values = arr.flatten()
+    if arr.null_count or values.null_count or (lens != lens[0]).any():
+        raise ValueError(
+            "serving-table vectors must be non-null and of one length "
+            f"(null rows {arr.null_count}, lengths {lens.min()}..{lens.max()})"
+        )
+    return values.to_numpy().reshape(len(arr), int(lens[0]))
+
+
 class HotSearchIndex:
     """Driver-resident serving artifact for the four search modes.
 
-    Built by :meth:`from_engine` (one bounded Spark collect per
+    Built by :meth:`from_engine` (one bounded Arrow collect per
     table); scores with numpy against the resident copies. Output rows
     carry the SAME column names and ordering as the operator layer's
     DataFrames, so the service can swap tiers without touching its
@@ -113,7 +193,7 @@ class HotSearchIndex:
         image_mat: np.ndarray | None,
         seg_image_ids: np.ndarray | None,
         seg_mat: np.ndarray | None,
-        tag_rows: list[tuple] | None,
+        tag_rows: TagRows | None,
         image_col: str = "image_id",
     ):
         self.image_col = image_col
@@ -122,63 +202,53 @@ class HotSearchIndex:
         self.dim = int(image_mat.shape[1]) if image_mat is not None else None
         # segment rows sorted by image id → per-image contiguous slices
         # (reduceat group boundaries), the layout every segment-mode
-        # aggregation walks
+        # aggregation walks; from_engine and load hand them over sorted
         if seg_mat is not None and len(seg_image_ids):
-            order = np.argsort(seg_image_ids, kind="stable")
-            self.seg_image_ids = seg_image_ids[order]
-            self.seg_mat = seg_mat[order]
-            self.seg_groups, self.seg_starts = np.unique(
-                self.seg_image_ids, return_index=True
-            )
+            if (seg_image_ids[1:] < seg_image_ids[:-1]).any():
+                order = np.argsort(seg_image_ids, kind="stable")
+                seg_image_ids, seg_mat = seg_image_ids[order], seg_mat[order]
+            self.seg_image_ids = seg_image_ids
+            self.seg_mat = seg_mat
+            self.seg_groups = np.unique(seg_image_ids)
         else:
-            self.seg_image_ids = self.seg_mat = None
-            self.seg_groups = self.seg_starts = None
-        self.tag_rows = tag_rows  # list of (image_id, [(tag, conf), …])
+            self.seg_image_ids = self.seg_mat = self.seg_groups = None
+        self.tag_rows = tag_rows
 
     # -- build ---------------------------------------------------------
 
     @classmethod
     def from_engine(cls, engine) -> "HotSearchIndex":
         """Collect the serving artifact from an Engine's tables — the
-        hot tier's "index build". Bounded by the serving columns only
-        (P1 pruning: the collect projects ids + vectors, nothing
-        else)."""
+        hot tier's "index build". One ``toArrow()`` per table, projected
+        to the serving columns only (P1 pruning: ids + vectors + tags).
+        Each vector matrix is read from the Arrow list column's flat
+        values buffer and widened to float64 once (exact from float32;
+        a float64 column is used in place, read-only); segments are put
+        in image-id order before the widening, so no second float64
+        copy is ever made."""
+        col = engine.image_col
+
+        def table(df, vec_col):
+            t = df.select(col, vec_col).toArrow()
+            return t.column(0).combine_chunks(), t.column(1).combine_chunks()
+
         img_ids = img_mat = None
         if engine.images is not None:
-            rows = engine.images.select(
-                engine.image_col, "embedding"
-            ).collect()
-            img_ids = np.asarray([r[0] for r in rows])
-            img_mat = (
-                np.asarray([r[1] for r in rows], dtype=np.float64)
-                if rows
-                else np.zeros((0, 0), dtype=np.float64)
-            )
+            ids, vecs = table(engine.images, "embedding")
+            img_ids = _ids(ids)
+            img_mat = _vectors(vecs).astype(np.float64, copy=False)
         seg_ids = seg_mat = None
         if engine.segments is not None:
-            rows = engine.segments.select(
-                engine.image_col, "clip_features"
-            ).collect()
-            seg_ids = np.asarray([r[0] for r in rows])
-            seg_mat = (
-                np.asarray([r[1] for r in rows], dtype=np.float64)
-                if rows
-                else np.zeros((0, 0), dtype=np.float64)
-            )
+            ids, vecs = table(engine.segments, "clip_features")
+            seg_ids = _ids(ids)
+            order = np.argsort(seg_ids, kind="stable")
+            seg_ids = seg_ids[order]
+            seg_mat = _vectors(vecs)[order].astype(np.float64, copy=False)
         tag_rows = None
         if engine.segment_tags is not None:
-            tag_rows = [
-                (
-                    r[0],
-                    [(t["tag"], float(t["confidence"])) for t in (r[1] or [])],
-                )
-                for r in engine.segment_tags.select(
-                    engine.image_col, "tags"
-                ).collect()
-            ]
+            tag_rows = TagRows.from_arrow(*table(engine.segment_tags, "tags"))
         return cls(
-            img_ids, img_mat, seg_ids, seg_mat, tag_rows,
-            image_col=engine.image_col,
+            img_ids, img_mat, seg_ids, seg_mat, tag_rows, image_col=col,
         )
 
     # -- durable artifact (build once with Spark, serve forever) --------
@@ -193,9 +263,10 @@ class HotSearchIndex:
         :meth:`load` with numpy alone: no SparkSession, no JVM.
 
         Layout: ids + matrices verbatim (already sorted), tag rows as
-        four flat arrays (row ids, per-row pair counts, names,
-        confidences) — no pickle anywhere, so the file is portable
-        across Python versions and safe to load from shared storage.
+        their four resident arrays (row ids, per-row pair counts,
+        names, confidences) — no pickle anywhere, so the file is
+        portable across Python versions and safe to load from shared
+        storage.
 
         ``dtype="float32"`` stores the vector matrices at 4 bytes per
         value — halving shard RSS and doubling the per-process ceiling
@@ -208,8 +279,6 @@ class HotSearchIndex:
         quantization, absorbed by the engine's 1e-6 rounded-score
         ordering except for exact ties at the rounding boundary
         (equivalence pinned at 1e-6 in tests/test_serving.py)."""
-        import numpy as np
-
         cast = (lambda m: m.astype(np.dtype(dtype))) if dtype else (lambda m: m)
         data: dict = {"image_col": np.asarray(self.image_col)}
         if self.image_mat is not None:
@@ -219,19 +288,10 @@ class HotSearchIndex:
             data["seg_image_ids"] = self.seg_image_ids
             data["seg_mat"] = cast(self.seg_mat)
         if self.tag_rows is not None:
-            data["tag_row_ids"] = np.asarray(
-                [i for i, _ in self.tag_rows]
-            )
-            data["tag_row_lens"] = np.asarray(
-                [len(p) for _, p in self.tag_rows], dtype=np.int64
-            )
-            names = [t for _, p in self.tag_rows for t, _ in p]
-            data["tag_names"] = (
-                np.asarray(names) if names else np.asarray([], dtype="U1")
-            )
-            data["tag_confs"] = np.asarray(
-                [c for _, p in self.tag_rows for _, c in p],
-                dtype=np.float64,
+            t = self.tag_rows
+            data.update(
+                tag_row_ids=t.ids, tag_row_lens=t.lens,
+                tag_names=t.names, tag_confs=t.confs,
             )
         with open(path, "wb") as f:
             np.savez(f, **data)
@@ -242,71 +302,26 @@ class HotSearchIndex:
         """Boot the artifact from a :meth:`save` file — numpy only, no
         SparkSession (equivalence with the live-built copy is pinned
         per mode in tests/test_serving.py)."""
-        import numpy as np
-
         with np.load(path, allow_pickle=False) as z:
             image_col = (
                 str(z["image_col"][()]) if "image_col" in z else "image_id"
             )
-            image_ids = z["image_ids"] if "image_ids" in z else None
-            image_mat = z["image_mat"] if "image_mat" in z else None
-            seg_ids = (
-                z["seg_image_ids"] if "seg_image_ids" in z else None
-            )
-            seg_mat = z["seg_mat"] if "seg_mat" in z else None
             tag_rows = None
             if "tag_row_lens" in z:
-                ids = z["tag_row_ids"].tolist()
-                lens = z["tag_row_lens"].tolist()
-                names = z["tag_names"].tolist()
-                confs = z["tag_confs"].tolist()
-                tag_rows, pos = [], 0
-                for i, n in zip(ids, lens):
-                    tag_rows.append(
-                        (
-                            i,
-                            [
-                                (str(names[pos + j]), float(confs[pos + j]))
-                                for j in range(n)
-                            ],
-                        )
-                    )
-                    pos += n
-        return cls(
-            image_ids, image_mat, seg_ids, seg_mat, tag_rows,
-            image_col=image_col,
-        )
-
-    # -- per-image segment maxima (the W4 argmax kernel) ----------------
-
-    def _segment_maxima(self, cand_mask: np.ndarray, qmat: np.ndarray):
-        """For each image whose mask bit is set: per-query max cosine
-        over the image's segments. Returns (image_ids, maxima matrix
-        n_images × n_queries). Same float64 matmul as the Arrow path
-        (vectors.dot_batch), grouped with reduceat over the image-
-        sorted layout."""
-        rows = np.flatnonzero(cand_mask)
-        if not len(rows):
-            return np.empty(0, dtype=self.seg_groups.dtype), np.zeros(
-                (0, len(qmat))
+                tag_rows = TagRows(
+                    z["tag_row_ids"], z["tag_row_lens"],
+                    z["tag_names"], z["tag_confs"],
+                )
+            return cls(
+                z.get("image_ids"), z.get("image_mat"),
+                z.get("seg_image_ids"), z.get("seg_mat"), tag_rows,
+                image_col=image_col,
             )
-        sims = self.seg_mat[rows] @ qmat.T  # (n_rows, Q)
-        gids = self.seg_image_ids[rows]
-        groups, starts = np.unique(gids, return_index=True)
-        maxima = np.maximum.reduceat(sims, starts, axis=0)
-        return groups, maxima
 
-    def _cand_mask_for_images(self, images: np.ndarray) -> np.ndarray:
-        return np.isin(self.seg_image_ids, images)
+    # -- shared scoring kernels -----------------------------------------
 
-    # -- the four modes --------------------------------------------------
-
-    def whole(
-        self, query_vec: Sequence[float], k: int,
-        allowed: set | None = None,
-    ) -> list[dict]:
-        """retrieval.knn twin: score = dot + 1.0, (score DESC, id ASC),
-        top k → [{image_col, score}]."""
+    def _whole_scores(self, query_vec, allowed):
+        """(ids, calibrated whole scores), restricted to ``allowed``."""
         # query cast to the MATRIX dtype: a float32 artifact scores in
         # float32 (mixed-dtype matmul would silently materialize a
         # float64 copy of the whole matrix for BLAS)
@@ -314,10 +329,43 @@ class HotSearchIndex:
         scores = self.image_mat @ q + 1.0
         ids = self.image_ids
         if allowed is not None:
-            keep = np.asarray(
-                [i in allowed for i in ids.tolist()], dtype=bool
-            )
+            keep = np.isin(ids, _id_array(allowed))
             ids, scores = ids[keep], scores[keep]
+        return ids, scores
+
+    def _segment_scores(self, images, query_rows) -> list[tuple]:
+        """The W4 argmax kernel: for each of ``images`` that has
+        segments, ``(id, avg, max)`` over the per-query-segment max
+        cosines. Same float64 matmul as the Arrow path
+        (vectors.dot_batch), grouped with reduceat over the image-
+        sorted layout; the avg sums left to right, like the Catalyst
+        column sum."""
+        rows = np.flatnonzero(np.isin(self.seg_image_ids, images))
+        if not len(rows):
+            return []
+        qmat = np.asarray(
+            [[float(x) for x in v] for _, v in query_rows],
+            dtype=self.seg_mat.dtype,
+        )
+        sims = self.seg_mat[rows] @ qmat.T  # (n_rows, Q)
+        groups, starts = np.unique(self.seg_image_ids[rows], return_index=True)
+        maxima = np.maximum.reduceat(sims, starts, axis=0)
+        out = []
+        for g, row in zip(groups.tolist(), maxima):
+            total = 0.0 + row[0]
+            for x in row[1:]:
+                total = total + x
+            out.append((g, total / float(len(row)), float(row.max())))
+        return out
+
+    # -- the four modes --------------------------------------------------
+
+    def whole(
+        self, query_vec: Sequence[float], k: int, allowed=None
+    ) -> list[dict]:
+        """retrieval.knn twin: score = dot + 1.0, (score DESC, id ASC),
+        top k → [{image_col, score}]."""
+        ids, scores = self._whole_scores(query_vec, allowed)
         take = _topk_order(scores, ids, k)
         return [
             {self.image_col: ids[i].item(), "score": float(scores[i])}
@@ -329,7 +377,7 @@ class HotSearchIndex:
         query_rows: Sequence[tuple],
         top_k: int,
         candidate_cap: int | None = None,
-        allowed: set | None = None,
+        allowed=None,
     ) -> list[dict]:
         """retrieval.segment_search twin: per-query-segment argmax per
         image, avg + max of the maxima, candidate cap = first ``cap``
@@ -337,29 +385,12 @@ class HotSearchIndex:
         heuristic), ordering (round6(avg) DESC, id ASC)."""
         if self.seg_groups is None:  # shard/corpus with no segments
             return []
-        qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=self.seg_mat.dtype,
-        )
         groups = self.seg_groups
         if allowed is not None:
-            keep = np.asarray(
-                [g in allowed for g in groups.tolist()], dtype=bool
-            )
-            groups = groups[keep]
+            groups = groups[np.isin(groups, _id_array(allowed))]
         if candidate_cap is not None:
             groups = groups[: int(candidate_cap)]  # unique() ⇒ sorted asc
-        mask = self._cand_mask_for_images(groups)
-        gids, maxima = self._segment_maxima(mask, qmat)
-        nq = len(query_rows)
-        out = []
-        for gi, g in enumerate(gids.tolist()):
-            row = maxima[gi]
-            total = 0.0 + row[0]
-            for j in range(1, nq):  # left-to-right, matching the
-                total = total + row[j]  # Catalyst column sum
-            avg = total / float(nq)
-            out.append((g, avg, float(row.max())))
+        out = self._segment_scores(groups, query_rows)
         out.sort(key=lambda r: (-round_half_up(r[1], 6), r[0]))
         return [
             {
@@ -377,43 +408,21 @@ class HotSearchIndex:
         top_k: int,
         whole_weight: float = 0.4,
         segment_weight: float = 0.6,
-        allowed: set | None = None,
+        allowed=None,
     ) -> list[dict]:
         """retrieval.hybrid_search twin: phase-1 pool max(20k, 100) on
         the calibrated whole score, phase-2 segment avg-of-maxima (raw
         cosine) for pool members only, missing → 0.0, hybrid =
         w·whole + w·segment, (round6(hybrid) DESC, id ASC)."""
-        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
-        scores = self.image_mat @ q + 1.0
-        ids = self.image_ids
-        if allowed is not None:
-            keep = np.asarray(
-                [i in allowed for i in ids.tolist()], dtype=bool
-            )
-            ids, scores = ids[keep], scores[keep]
-        pool = max(int(top_k) * 20, 100)
-        take = _topk_order(scores, ids, pool)
+        ids, scores = self._whole_scores(query_vec, allowed)
+        take = _topk_order(scores, ids, max(int(top_k) * 20, 100))
         pool_ids = ids[take]
-        whole_by_id = dict(zip(pool_ids.tolist(), scores[take].tolist()))
-
-        qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=(
-                self.seg_mat.dtype if self.seg_mat is not None else np.float64
-            ),
+        seg_by_id = (
+            {g: a for g, a, _ in self._segment_scores(pool_ids, query_rows)}
+            if self.seg_mat is not None
+            else {}
         )
-        seg_by_id: dict = {}
-        if self.seg_mat is not None:
-            mask = self._cand_mask_for_images(pool_ids)
-            gids, maxima = self._segment_maxima(mask, qmat)
-            nq = len(query_rows)
-            for gi, g in enumerate(gids.tolist()):
-                row = maxima[gi]
-                total = 0.0 + row[0]
-                for j in range(1, nq):
-                    total = total + row[j]
-                seg_by_id[g] = total / float(nq)
-
+        whole_by_id = dict(zip(pool_ids.tolist(), scores[take].tolist()))
         ww, ws = float(whole_weight), float(segment_weight)
         out = []
         for g, w in whole_by_id.items():
@@ -437,30 +446,25 @@ class HotSearchIndex:
         top_k: int = 10,
     ) -> list[dict]:
         """retrieval.tag_search twin: OR-match ≥ confidence floor,
-        ranked by (#distinct matched tags DESC, max confidence DESC,
-        id ASC)."""
-        tagset = {str(t) for t in tags}
-        floor = float(min_confidence)
-        out = []
-        for image_id, pairs in self.tag_rows:
-            hits = [(t, c) for t, c in pairs if t in tagset and c >= floor]
-            if not hits:
-                continue
-            out.append(
-                (
-                    image_id,
-                    len({t for t, _ in hits}),
-                    max(c for _, c in hits),
-                )
-            )
-        out.sort(key=lambda r: (-r[1], -r[2], r[0]))
+        pooled per image id, ranked by (#distinct matched tags DESC,
+        max confidence DESC, id ASC)."""
+        t = self.tag_rows
+        hit = np.flatnonzero(t.hits(tags, min_confidence))
+        if not len(hit):
+            return []
+        ids, inv = np.unique(t.pair_ids[hit], return_inverse=True)
+        keys = np.unique(inv * len(t.vocab) + t.codes[hit])  # (id, tag)
+        n_matched = np.bincount(keys // len(t.vocab), minlength=len(ids))
+        max_conf = np.full(len(ids), -np.inf)
+        np.maximum.at(max_conf, inv, t.confs[hit])
+        take = np.lexsort((ids, -max_conf, -n_matched))[: int(top_k)]
         return [
             {
-                self.image_col: g,
-                "matched_tags": n,
-                "max_confidence": float(c),
+                self.image_col: ids[i].item(),
+                "matched_tags": int(n_matched[i]),
+                "max_confidence": float(max_conf[i]),
             }
-            for g, n, c in out[: int(top_k)]
+            for i in take
         ]
 
     def tag_allowed(
@@ -468,13 +472,16 @@ class HotSearchIndex:
     ) -> set:
         """Engine._tag_allowed_ids twin: ids with ≥1 tag in the filter
         at or above the confidence floor."""
-        tagset = {str(t) for t in tag_filter}
-        floor = float(min_confidence)
-        return {
-            image_id
-            for image_id, pairs in self.tag_rows
-            if any(t in tagset and c >= floor for t, c in pairs)
-        }
+        t = self.tag_rows
+        hit = t.hits(tag_filter, min_confidence)
+        return set(np.unique(t.pair_ids[hit]).tolist())
+
+
+def _id_array(allowed) -> np.ndarray:
+    """An ``allowed`` id set (or array) as an array for ``np.isin``."""
+    if isinstance(allowed, np.ndarray):
+        return allowed
+    return np.asarray(list(allowed))
 
 
 class ShardedHotIndex:
@@ -524,34 +531,23 @@ class ShardedHotIndex:
         """Split a built artifact into ``n_shards`` by ``id %
         n_shards`` (any id-deterministic partitioner works; a Spark
         build writes the same split with one ``pmod`` column)."""
+        n = int(n_shards)
+        img_shard = hot.image_ids % n
+        seg_shard = None if hot.seg_mat is None else hot.seg_image_ids % n
+        tag_shard = None if hot.tag_rows is None else hot.tag_rows.ids % n
         shards = []
-        for s in range(int(n_shards)):
-            def keep(ids):
-                return np.asarray(
-                    [int(i) % n_shards == s for i in ids.tolist()],
-                    dtype=bool,
-                )
-
-            img_keep = keep(hot.image_ids)
-            seg_ids = seg_mat = None
-            if hot.seg_mat is not None:
-                seg_keep = keep(hot.seg_image_ids)
-                seg_ids = hot.seg_image_ids[seg_keep]
-                seg_mat = hot.seg_mat[seg_keep]
-            tag_rows = None
-            if hot.tag_rows is not None:
-                tag_rows = [
-                    (i, p) for i, p in hot.tag_rows
-                    if int(i) % n_shards == s
-                ]
+        for s in range(n):
+            img = img_shard == s
+            seg_ids = seg_mat = tag_rows = None
+            if seg_shard is not None:
+                seg = seg_shard == s
+                seg_ids, seg_mat = hot.seg_image_ids[seg], hot.seg_mat[seg]
+            if tag_shard is not None:
+                tag_rows = hot.tag_rows.take(tag_shard == s)
             shards.append(
                 HotSearchIndex(
-                    hot.image_ids[img_keep],
-                    hot.image_mat[img_keep],
-                    seg_ids,
-                    seg_mat,
-                    tag_rows,
-                    image_col=hot.image_col,
+                    hot.image_ids[img], hot.image_mat[img], seg_ids, seg_mat,
+                    tag_rows, image_col=hot.image_col,
                 )
             )
         return cls(shards, hot.image_col)
@@ -595,17 +591,18 @@ class ShardedHotIndex:
             k,
         )
 
-    def _global_cap_ids(self, cap: int, allowed) -> set:
-        cand = []
+    def _global_cap_ids(self, cap: int, allowed) -> np.ndarray:
+        if allowed is not None:
+            allowed = _id_array(allowed)
+        cand = [np.empty(0, dtype=np.int64)]
         for s in self.shards:
             groups = s.seg_groups
             if groups is None:
                 continue
-            ids = groups.tolist()
             if allowed is not None:
-                ids = [g for g in ids if g in allowed]
-            cand.extend(ids[: int(cap)])  # seg_groups is sorted asc
-        return set(sorted(cand)[: int(cap)])
+                groups = groups[np.isin(groups, allowed)]
+            cand.append(groups[: int(cap)])  # seg_groups is sorted asc
+        return np.sort(np.concatenate(cand))[: int(cap)]
 
     def segment(
         self, query_rows, top_k, candidate_cap=None, allowed=None

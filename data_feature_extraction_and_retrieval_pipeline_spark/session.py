@@ -10,6 +10,7 @@ oracle operates on naive timestamps).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -86,22 +87,23 @@ def get_spark(
         # change after SparkContext start, so a second caller's
         # SPARK_GRAFT_SHUFFLE_BYPASS override would not take effect.
         # Surface the mismatch instead of hiding it (ADVICE r13).
+        # Compared as numbers ("0" and "00" are the same threshold).
+        # warnings.warn's default filter reports a given mismatch once
+        # per process, not on every attach.
         want = os.environ.get("SPARK_GRAFT_SHUFFLE_BYPASS", "0")
         try:
             have = active.sparkContext.getConf().get(
                 "spark.shuffle.sort.bypassMergeThreshold", "200"
             )
+            differs = int(have) != int(want)
         except Exception:
-            have = None
-        if have is not None and have != want:
-            import sys
-
-            print(
+            differs = False
+        if differs:
+            warnings.warn(
                 "get_spark: attaching to an active session whose "
                 f"spark.shuffle.sort.bypassMergeThreshold={have} differs "
                 f"from the requested {want}; the static conf cannot be "
-                "changed mid-session",
-                file=sys.stderr,
+                "changed mid-session"
             )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -597,3 +597,94 @@ class TestEventsAnalytics:
         )
         out = {r.uid: r.depth for r in ev.funnel(["a", "b"]).collect()}
         assert out == {1: 2}
+
+
+def _probed(spark, fn, group):
+    """(result of fn(), whether it ran a Spark job) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, bool(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_embedding_dim_probed_once_per_table_epoch(spark):
+    """The stub encoder's dimension comes from the hot build when there
+    is one, else from one Spark probe reused until the tables change;
+    an empty images table still raises."""
+    schema = "image_id long, embedding array<float>"
+    eng = Engine(spark.createDataFrame([(0, [1.0, 0.0, 0.0])], schema))
+    assert _probed(spark, eng._embedding_dim, "dim-a") == (3, True)
+    assert _probed(spark, eng._embedding_dim, "dim-b") == (3, False)
+    eng.ingest(images=spark.createDataFrame([(1, [0.0, 1.0, 0.0])], schema))
+    assert _probed(spark, eng._embedding_dim, "dim-c") == (3, True)
+    eng.images = spark.createDataFrame([(2, [1.0, 0.0])], schema)  # rebind
+    assert _probed(spark, eng._embedding_dim, "dim-d") == (2, True)
+
+    built = Engine(spark.createDataFrame([(0, [1.0] * 5)], schema))
+    built.hot()
+    assert _probed(spark, built._embedding_dim, "dim-e") == (5, False)
+
+    empty = Engine(spark.createDataFrame([], schema))
+    for _ in range(2):
+        with pytest.raises(ValueError, match="images table is empty"):
+            empty.search_content(
+                b"x", filename="q.png", model_loader=lambda: None
+            )
+
+
+def test_checkpoint_guard_rejects_lazy_pairs(spark):
+    """dedup_near's unpersist guard is an explicit raise (kept under
+    ``python -O``): a lazy pair frame fails it, an eager checkpoint
+    passes, and a frame with no JVM plan (Spark Connect) skips it."""
+    from data_feature_extraction_and_retrieval_pipeline_spark.api import (
+        _require_checkpointed,
+    )
+
+    lazy = spark.range(4).withColumnRenamed("id", "a")
+    with pytest.raises(RuntimeError, match="eagerly checkpointed"):
+        _require_checkpointed(lazy)
+    _require_checkpointed(lazy.localCheckpoint(eager=True))
+    _require_checkpointed(object())
+
+
+def test_bypass_threshold_warning_numeric_and_once(monkeypatch):
+    """get_spark compares the shuffle-bypass threshold as a number
+    ("0" is "00") and warns once per process on a real mismatch."""
+    import warnings
+
+    from pyspark.sql import SparkSession
+
+    from data_feature_extraction_and_retrieval_pipeline_spark import session
+
+    class _Conf:
+        value = "00"
+
+        def get(self, key, default=None):
+            return self.value
+
+    conf = _Conf()
+
+    class _Active:
+        class sparkContext:
+            @staticmethod
+            def getConf():
+                return conf
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: _Active)
+    # attach without touching the real session's runtime confs
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: None)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_BYPASS", "0")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("default")  # the shipped filter: once
+        session.get_spark()
+        conf.value = "200"
+        session.get_spark()
+        session.get_spark()
+    msgs = [
+        str(w.message) for w in seen
+        if "bypassMergeThreshold" in str(w.message)
+    ]
+    assert len(msgs) == 1 and "=200 differs" in msgs[0]

@@ -22,6 +22,7 @@ from data_feature_extraction_and_retrieval_pipeline_spark.api import (
     Percolator,
 )
 from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
+    HotSearchIndex,
     py_tokens,
     round_half_up,
 )
@@ -654,3 +655,261 @@ def test_sharded_float32_from_paths(engine, tmp_path):
         sharded.hybrid(qvec, seg_rows, 5),
         hot.hybrid(qvec, seg_rows, 5), 1e-6,
     )
+
+
+# -- columnar artifact (Arrow build, flat tag arrays) ----------------------
+
+
+_TAGS_SCHEMA = (
+    "image_id long, tags array<struct<tag string, confidence float>>"
+)
+
+
+def _row_build(eng):
+    """The artifact as a row-wise ``collect()`` builds it — the
+    reference the columnar build must reproduce bit for bit."""
+    import numpy as np
+
+    col = eng.image_col
+    img = eng.images.select(col, "embedding").collect()
+    seg = eng.segments.select(col, "clip_features").collect()
+    seg_ids = np.asarray([r[0] for r in seg])
+    order = np.argsort(seg_ids, kind="stable")
+    tags = [
+        (r[0], [(t["tag"], float(t["confidence"])) for t in (r[1] or [])])
+        for r in eng.segment_tags.select(col, "tags").collect()
+    ]
+    return (
+        np.asarray([r[0] for r in img]),
+        np.asarray([r[1] for r in img], dtype=np.float64),
+        seg_ids[order],
+        np.asarray([r[1] for r in seg], dtype=np.float64)[order],
+        tags,
+    )
+
+
+def _tag_lists(t):
+    """TagRows back to (image_id, [(tag, confidence), …]) rows."""
+    out, pos = [], 0
+    for i, n in zip(t.ids.tolist(), t.lens.tolist()):
+        pairs = zip(t.names[pos:pos + n].tolist(), t.confs[pos:pos + n].tolist())
+        out.append((i, list(pairs)))
+        pos += n
+    return out
+
+
+def _assert_bits_equal(a, b):
+    assert a.dtype == b.dtype and a.shape == b.shape, (a.dtype, b.dtype)
+    assert a.tobytes() == b.tobytes()
+
+
+def _random_tag_rows(rng, n_rows, n_ids):
+    """Tag rows over a few names with confidences on a float32-exact
+    grid (so floors can sit exactly on a confidence), repeated tags
+    within a row, rows with no tags and image ids shared by rows."""
+    names = ["cat", "dog", "fish", "bird", "tree"]
+    grid = [0.0, 0.125, 0.25, 0.5, 0.75, 1.0]
+    rows = []
+    for _ in range(n_rows):
+        pairs = [
+            (rng.choice(names), rng.choice(grid))
+            for _ in range(rng.choice([0, 0, 1, 2, 3, 5]))
+        ]
+        if pairs and rng.random() < 0.3:
+            pairs.append((pairs[0][0], rng.choice(grid)))  # repeated tag
+        rows.append((rng.randrange(n_ids), pairs))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def shuffled_engine(spark):
+    """Small tables whose segment rows are NOT in image-id order, with
+    random tag rows (and one null tag list)."""
+    import random
+
+    rng = random.Random(0xA11)
+    dim = 6
+    vec = lambda: [rng.uniform(-1, 1) for _ in range(dim)]  # noqa: E731
+    images = spark.createDataFrame(
+        [(i, vec()) for i in rng.sample(range(40), 40)],
+        "image_id long, embedding array<float>",
+    )
+    segments = spark.createDataFrame(
+        [(rng.randrange(40), k, vec()) for k in range(150)],
+        "image_id long, vec_id long, clip_features array<float>",
+    )
+    tag_rows = _random_tag_rows(rng, 80, 40) + [(41, None)]
+    tags = spark.createDataFrame(tag_rows, _TAGS_SCHEMA)
+    return Engine(images, segments=segments, segment_tags=tags)
+
+
+@pytest.mark.parametrize("which", ["sf", "shuffled"])
+def test_from_engine_bit_equal_to_row_collect(engine, shuffled_engine, which):
+    """The Arrow build's ids, float64 matrices, segment order and tag
+    rows equal a row-wise collect of the same tables, bit for bit."""
+    eng = engine if which == "sf" else shuffled_engine
+    img_ids, img_mat, seg_ids, seg_mat, tags = _row_build(eng)
+    hot = HotSearchIndex.from_engine(eng)
+    _assert_bits_equal(hot.image_ids, img_ids)
+    _assert_bits_equal(hot.image_mat, img_mat)
+    _assert_bits_equal(hot.seg_image_ids, seg_ids)
+    _assert_bits_equal(hot.seg_mat, seg_mat)
+    assert _tag_lists(hot.tag_rows) == tags
+    assert hot.dim == img_mat.shape[1]
+
+
+def test_from_engine_rejects_null_and_ragged_vectors(spark):
+    schema = "image_id long, embedding array<float>"
+    for rows in (
+        [(0, [1.0, 0.0]), (1, None)],  # null vector
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0, 0.0])],  # ragged
+        [(0, [1.0, None])],  # null element
+    ):
+        eng = Engine(spark.createDataFrame(rows, schema))
+        with pytest.raises(ValueError, match="non-null and of one length"):
+            HotSearchIndex.from_engine(eng)
+    segs = spark.createDataFrame(
+        [(0, 0, [1.0]), (0, 1, [1.0, 0.0])],
+        "image_id long, vec_id long, clip_features array<float>",
+    )
+    eng = Engine(spark.createDataFrame([(0, [1.0])], schema), segments=segs)
+    with pytest.raises(ValueError, match="non-null and of one length"):
+        HotSearchIndex.from_engine(eng)
+
+
+def test_from_engine_empty_tables(spark):
+    eng = Engine(
+        spark.createDataFrame([], "image_id long, embedding array<float>"),
+        segments=spark.createDataFrame(
+            [], "image_id long, vec_id long, clip_features array<float>"
+        ),
+        segment_tags=spark.createDataFrame([], _TAGS_SCHEMA),
+    )
+    hot = HotSearchIndex.from_engine(eng)
+    assert hot.image_mat.shape == (0, 0) and hot.dim == 0
+    assert len(hot.image_ids) == 0
+    assert hot.seg_mat is None and hot.seg_groups is None
+    assert len(hot.tag_rows) == 0
+    assert hot.whole([], 5) == []
+    assert hot.tags(["cat"], 0.1, 5) == []
+    assert hot.tag_allowed(["cat"], 0.1) == set()
+
+
+def _ref_tags(rows, tags, floor, top_k):
+    """Pure-Python tag_search: matches pooled per image id over all of
+    its rows (the Spark operator's groupBy)."""
+    tagset = {str(t) for t in tags}
+    by_id: dict = {}
+    for image_id, pairs in rows:
+        for t, c in pairs:
+            if t in tagset and c >= floor:
+                by_id.setdefault(image_id, []).append((t, c))
+    out = [
+        (i, len({t for t, _ in h}), max(c for _, c in h))
+        for i, h in by_id.items()
+    ]
+    out.sort(key=lambda r: (-r[1], -r[2], r[0]))
+    return [
+        {"image_id": g, "matched_tags": n, "max_confidence": float(c)}
+        for g, n, c in out[:top_k]
+    ]
+
+
+def _ref_tag_allowed(rows, tags, floor):
+    tagset = {str(t) for t in tags}
+    return {
+        i for i, pairs in rows
+        if any(t in tagset and c >= floor for t, c in pairs)
+    }
+
+
+def test_tags_and_tag_allowed_match_reference(shuffled_engine):
+    """Randomized parity of the numpy tag kernels against a pure-Python
+    reference, and on a few queries against the Spark plan: a tag
+    repeated within a row counts once, a confidence exactly at the
+    floor matches, rows with no tags never do, and rows sharing an
+    image id pool their matches."""
+    import random
+
+    hot = HotSearchIndex.from_engine(shuffled_engine)
+    rows = _tag_lists(hot.tag_rows)
+    assert any(not p for _, p in rows)
+    assert len({i for i, _ in rows}) < len(rows)
+    rng = random.Random(7)
+    names = ["cat", "dog", "fish", "bird", "tree", "absent"]
+    for n in range(60):
+        query = rng.sample(names, rng.randint(1, 4))
+        floor = rng.choice([0.0, 0.125, 0.25, 0.5, 0.75, 1.0, 0.3])
+        k = rng.choice([1, 3, 10, 100])
+        got = hot.tags(query, floor, k)
+        assert got == _ref_tags(rows, query, floor, k)
+        assert hot.tag_allowed(query, floor) == _ref_tag_allowed(
+            rows, query, floor
+        )
+        if n % 12 == 0:
+            df = shuffled_engine.search(
+                "tags", tags=query, min_confidence=floor, top_k=k
+            )
+            _assert_rows_equal(got, _spark_rows(df))
+
+
+def test_save_load_keeps_columnar_tags(shuffled_engine, tmp_path):
+    """save → load hands the four tag arrays back unchanged, and a file
+    in the row-era layout (the same keys, built from Python lists)
+    still loads and answers."""
+    import numpy as np
+
+    hot = HotSearchIndex.from_engine(shuffled_engine)
+    path = str(tmp_path / "tags.npz")
+    loaded = HotSearchIndex.load(hot.save(path))
+    for name in ("ids", "lens", "names", "confs"):
+        _assert_bits_equal(
+            getattr(loaded.tag_rows, name), getattr(hot.tag_rows, name)
+        )
+    with np.load(path, allow_pickle=False) as z:
+        assert z["tag_names"].dtype.kind == "U"
+
+    rows = [(5, [("cat", 0.5), ("dog", 0.25)]), (3, []), (9, [("cat", 0.75)])]
+    old = str(tmp_path / "old.npz")
+    with open(old, "wb") as f:
+        np.savez(
+            f,
+            image_col=np.asarray("image_id"),
+            image_ids=np.asarray([3, 5, 9]),
+            image_mat=np.eye(3),
+            tag_row_ids=np.asarray([i for i, _ in rows]),
+            tag_row_lens=np.asarray([len(p) for _, p in rows], dtype=np.int64),
+            tag_names=np.asarray([t for _, p in rows for t, _ in p]),
+            tag_confs=np.asarray(
+                [c for _, p in rows for _, c in p], dtype=np.float64
+            ),
+        )
+    booted = HotSearchIndex.load(old)
+    assert _tag_lists(booted.tag_rows) == rows
+    assert booted.tags(["cat"], 0.5, 5) == _ref_tags(rows, ["cat"], 0.5, 5)
+
+
+def test_null_tag_pairs_never_match(spark):
+    """A null tag, confidence or pair struct clears no floor — as in
+    Spark's filter — while the row's other pairs still match."""
+    eng = Engine(
+        spark.createDataFrame(
+            [(0, [1.0])], "image_id long, embedding array<float>"
+        ),
+        segment_tags=spark.createDataFrame(
+            [
+                (0, [(None, 0.9), ("cat", 0.5)]),
+                (1, [("cat", None), None]),
+                (2, [("dog", 0.75), None, (None, None)]),
+            ],
+            _TAGS_SCHEMA,
+        ),
+    )
+    hot = HotSearchIndex.from_engine(eng)
+    query = ["cat", "dog", ""]  # "" must not match a null tag
+    spark_rows = _spark_rows(
+        eng.search("tags", tags=query, min_confidence=0.0)
+    )
+    assert hot.tags(query, 0.0, 10) == spark_rows
+    assert [r["image_id"] for r in spark_rows] == [2, 0]
+    assert hot.tag_allowed(query, 0.0) == {0, 2}
