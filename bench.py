@@ -20,11 +20,13 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -162,6 +164,33 @@ HEADLINE = [
     # banded Hamming blocking → exact verify)
     "dedup_image_phash",
 ]
+
+
+def trailing_artifacts(pattern: str, exclude: str | None = None, **config) -> list[dict]:
+    """Committed bench artifacts (``pattern`` under the repo root, by
+    name, oldest first) measured at the same config — every ``config``
+    key (e.g. ``sf``, ``cpus``, ``mult``) must equal the artifact's
+    recorded value. A driver-wrapped artifact's payload (``parsed``) is
+    read with its wrapper's ``sf``/``cpus``. Job floors, oracle totals
+    and walls do not transfer across core counts, so an artifact that
+    never recorded its ``cpus`` matches no config that names one."""
+    out = []
+    for p in sorted(REPO.glob(pattern)):
+        if p.name == exclude:
+            continue
+        try:
+            raw = json.loads(p.read_text())
+        except (OSError, ValueError):
+            continue
+        if not isinstance(raw, dict):
+            continue
+        doc = raw.get("parsed") or raw.get("output") or raw
+        if not isinstance(doc, dict):
+            continue
+        doc = {**{k: raw[k] for k in ("sf", "cpus") if k in raw}, **doc}
+        if all(doc.get(k) == v for k, v in config.items()):
+            out.append(doc)
+    return out
 
 
 def main() -> None:
@@ -353,38 +382,29 @@ def main() -> None:
     # wire — so this guard (like tools/bench_x10.py's) now watches
     # three signals and trips on ANY: the Spark job floor, the oracle
     # denominator total, and the median per-query Spark wall drift vs
-    # the most recent committed artifact.
-    trailing = []
-    trailing_oracle = []
-    prev_queries = None
-    for p in sorted(Path(__file__).resolve().parent.glob("BENCH_r*.json")):
-        try:
-            d = json.loads(p.read_text())
-            d = d.get("parsed") or d.get("output") or d
-            if not isinstance(d, dict):
-                continue
-            # oracle totals and per-query walls scale with the SF; a
-            # local run at another SF must not poison the trailing
-            # medians (the floor is SF-invariant and stays usable)
-            same_sf = d.get("sf") == sf
-            v = d.get("job_floor_s")
-            if isinstance(v, (int, float)):
-                trailing.append(float(v))
-            ot = d.get("oracle_total")
-            if (
-                same_sf
-                and isinstance(ot, (int, float))
-                and not d.get("noisy_run")
-            ):
-                trailing_oracle.append(float(ot))
-            q = d.get("queries")
-            if same_sf and isinstance(q, dict) and q:
-                prev_queries = q
-        except Exception:
-            continue
-    floor_median = (
-        sorted(trailing)[len(trailing) // 2] if trailing else None
+    # the most recent committed artifact — history taken only from
+    # artifacts at this run's (sf, cpus).
+    history = trailing_artifacts("BENCH_r*.json", sf=sf, cpus=int(CPUS))
+    trailing = [
+        float(d["job_floor_s"])
+        for d in history
+        if isinstance(d.get("job_floor_s"), (int, float))
+    ]
+    trailing_oracle = [
+        float(d["oracle_total"])
+        for d in history
+        if isinstance(d.get("oracle_total"), (int, float))
+        and not d.get("noisy_run")
+    ]
+    prev_queries = next(
+        (
+            d["queries"]
+            for d in reversed(history)
+            if isinstance(d.get("queries"), dict) and d["queries"]
+        ),
+        None,
     )
+    floor_median = statistics.median(trailing) if trailing else None
     noisy_floor = False
     if floor_median is not None and floor > 1.5 * floor_median:
         print(
@@ -396,9 +416,7 @@ def main() -> None:
         noisy_floor = floor > 1.5 * floor_median
     oracle_total_now = round(sum(oracle_timings.values()), 3)
     oracle_median_trailing = (
-        sorted(trailing_oracle)[len(trailing_oracle) // 2]
-        if trailing_oracle
-        else None
+        statistics.median(trailing_oracle) if trailing_oracle else None
     )
     noisy_oracle = (
         oracle_median_trailing is not None
@@ -406,13 +424,13 @@ def main() -> None:
     )
     wall_drift = None
     if prev_queries:
-        drifts = sorted(
+        drifts = [
             timings[n] / prev_queries[n]
             for n in timings
             if n in prev_queries and prev_queries[n] > 0
-        )
+        ]
         if drifts:
-            wall_drift = round(drifts[len(drifts) // 2], 3)
+            wall_drift = round(statistics.median(drifts), 3)
     noisy_wall = wall_drift is not None and wall_drift > 1.5
     noisy = noisy_floor or noisy_oracle or noisy_wall
     if noisy:
@@ -489,7 +507,7 @@ def main() -> None:
     # reason; at 66 headline queries even the per-query `queries` dict
     # alone overruns the buffer). stdout gets ONE totals-only line —
     # guaranteed to fit with margin at any registry size.
-    with open(Path(__file__).resolve().parent / "bench_detail.json", "w") as f:
+    with open(REPO / "bench_detail.json", "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     compact = {
         "metric": "headline_total",

@@ -164,8 +164,14 @@ class Engine:
         min_confidence: float = 0.1,
         tag_filter: Sequence[str] | None = None,
         arrow: bool = True,
+        query_rows: Sequence[tuple] | None = None,
     ) -> DataFrame:
         """Mode dispatcher (app.py:296-321 POST /api/search).
+
+        The query segments of the segment/hybrid modes come either as a
+        ``query_segments`` frame or as driver-held ``query_rows``
+        (``[(q_segment_id, features), …]``, what the content path
+        already holds) — the rows skip the frame's collect.
 
         ``tag_filter`` restricts the candidate universe of the vector
         modes BEFORE any scoring (broadcast semi-join on the allowed
@@ -200,18 +206,19 @@ class Engine:
                 images, query_vec, k=top_k,
                 id_col=self.image_col, vec_col="embedding",
             )
+        has_segs = query_segments is not None or query_rows is not None
         if mode == "segment":
-            if query_segments is None:
+            if not has_segs:
                 raise ValueError("segment mode needs query_segments")
             if segments is None:
                 raise ValueError("engine has no segments table")
             return retrieval.segment_search(
                 segments, query_segments,
                 top_k=top_k, candidate_cap=top_k * 3,
-                image_col=self.image_col, arrow=arrow,
+                image_col=self.image_col, query_rows=query_rows, arrow=arrow,
             )
         if mode == "hybrid":
-            if query_vec is None or query_segments is None:
+            if query_vec is None or not has_segs:
                 raise ValueError("hybrid mode needs query_vec + query_segments")
             if segments is None:
                 raise ValueError("engine has no segments table")
@@ -219,7 +226,7 @@ class Engine:
                 images, segments, query_vec, query_segments,
                 top_k=top_k, whole_weight=whole_weight,
                 segment_weight=segment_weight, image_col=self.image_col,
-                arrow=arrow,
+                query_rows=query_rows, arrow=arrow,
             )
         if mode == "tags":
             if not tags:
@@ -294,15 +301,10 @@ class Engine:
             payload, filename, mode, dim=dim,
             max_segments=max_segments, model_loader=model_loader,
         )
-        query_segments = None
-        if seg_rows is not None:
-            query_segments = self.images.sparkSession.createDataFrame(
-                seg_rows, "q_segment_id long, features array<float>"
-            )
         return self.search(
             mode,
             query_vec=qvec,
-            query_segments=query_segments,
+            query_rows=seg_rows,
             top_k=top_k,
             **kwargs,
         )

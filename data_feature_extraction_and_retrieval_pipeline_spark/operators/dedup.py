@@ -18,8 +18,6 @@ All signatures use xxhash64 with distinct seeds — JVM-side, no Python.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -69,112 +67,107 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-dup pairs by n-gram (word shingle) Jaccard ≥ threshold.
 
-    Pairs are mined from the shingle POSTING LISTS (r12 plan change,
-    values identical): explode → ONE exchange on shingle →
-    ``sort_array(collect_list(id))`` per shingle → streaming pairwise
-    generation (posexplode × suffix-slice explode, so the i<j pairs
-    come out id_a < id_b by construction) → per-pair count. The former
-    self-join shuffled the corpus-scale (doc, shingle) frame into BOTH
-    SortMergeJoin sides (two sorts of the shingle strings even with
-    the exchange reused); the posting-list form shuffles it once and
-    replaces the string sorts with a hash aggregate. Jaccard =
-    common / (|A| + |B| − common); only documents sharing ≥1 shingle
-    ever pair, exactly as before.
+    Pairs are mined from shingle POSTING LISTS whose entries carry each
+    document's shingle count: tokenize once → shingle once → explode
+    (id, n_shingles, shingle) → ONE exchange on shingle →
+    ``sort_array(collect_list(struct(id, n)))`` per shingle → streaming
+    pairwise generation (posexplode × suffix-slice explode, so the i<j
+    pairs come out id_a < id_b by construction, each with |A| + |B|)
+    → per-pair count → Jaccard = common / (|A| + |B| − common).
+    Only documents sharing ≥1 shingle ever pair, and the sizes never
+    need a second pass or a join back. A NULL text has no shingles.
 
-    Skew note: a stop-shingle with L docs generates L² pairs in either
-    formulation — that quadratic is what MinHash+LSH exists to avoid
-    (the scale path); this operator is the exact-but-expensive
-    sibling. The pair generation is Generate-streamed (never a
-    materialized L² array in one row); the collect_list row itself is
-    O(L) ids.
+    Skew note: a stop-shingle with L docs generates L² pairs — that
+    quadratic is what MinHash+LSH exists to avoid (the scale path);
+    this operator is the exact-but-expensive sibling. The pair
+    generation is Generate-streamed (never a materialized L² array in
+    one row); the collect_list row itself is O(L) entries.
     """
     # NOT persisted: the exploded (doc × shingle) frame is
     # O(corpus·shingles) — pinning it in cache at the module's
-    # 10¹⁰-document target evicts everything else (persist small
-    # derived frames like candidate pairs, never the corpus-scale
-    # explode — the _lsh_pairs_from_banded rule). sizes skips the
-    # explode entirely (word_shingles is already distinct, so
-    # |exploded rows| ≡ size of the shingle array — map-side only).
-    # tokenize ONCE into a column before shingling: word_shingles(n)
-    # references its input ~n+2 times, and embedding the tokenization
-    # expression re-splits the text per reference (measured 2× on the
-    # x10 corpus — same finding as bm25_topk's tokenize-once refactor)
-    tok = df.select(F.col(id_col), X.tokens(F.col(text_col)).alias("__t"))
-    sh = tok.select(
-        F.col(id_col),
-        F.explode(X.word_shingles(F.col("__t"), n)).alias("shingle"),
+    # 10¹⁰-document target evicts everything else. Tokens and shingles
+    # are each bound to a column once: word_shingles(n) references its
+    # input ~n+2 times, so an inlined tokenize tree re-splits the text
+    # per reference.
+    tok = df.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col), X.tokens(F.col(text_col)).alias("__t")
     )
-    # coalesce makes n_shingles NON-NULLABLE so the isnotnull(size_a/b)
-    # constraint the optimizer infers from the Jaccard filter folds to
-    # true instead of being pushed below this projection — substituted,
-    # the predicate re-embedded the whole shingle tree (~8 tokenize
-    # evaluations per corpus row in EACH size-join build side; r14
-    # audit, measured 8.4 → 7.0 s full-pipeline noop at x10). Values
-    # identical: a NULL-text doc explodes no shingles, so its id never
-    # reaches `common` and its sizes row never joins.
-    sizes = tok.select(
+    sh = tok.select(F.col(id_col), X.word_shingles(F.col("__t"), n).alias("__sh"))
+    # explode an EXPRESSION, not the __sh attribute: on an attribute
+    # input InferFiltersFromGenerate adds size(__sh) > 0 and pushes it
+    # below the projections, re-embedding the whole tokenize/shingle
+    # tree in the filter
+    exploded = sh.select(
         F.col(id_col),
-        F.coalesce(
-            F.size(X.word_shingles(F.col("__t"), n)), F.lit(0)
-        ).alias("n_shingles"),
+        F.inline(
+            F.transform(
+                "__sh",
+                lambda s: F.struct(
+                    s.alias("shingle"), F.size("__sh").alias("n_shingles")
+                ),
+            )
+        ),
     )
     postings = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
-        .filter(F.size("__ids") > 1)
+        exploded.groupBy("shingle")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col(id_col), F.col("n_shingles")))
+            ).alias("__p")
+        )
+        .filter(F.size("__p") > 1)
     )
-    # (i, id_a) × ids[i+2..] — both Generates stream, no flatten of an
-    # L² pair array in memory
-    heads = postings.select(
-        F.posexplode("__ids").alias("__i", "id_a"), F.col("__ids")
-    )
+    # (i, a) × p[i+2..] — both Generates stream, no flatten of an L²
+    # pair array in memory
+    heads = postings.select(F.posexplode("__p").alias("__i", "__a"), F.col("__p"))
+    # Jaccard needs only |A| + |B|, so one size column rides with the
+    # pair: the slim shuffle below carries three fields, not four
     pairgen = heads.select(
-        "id_a",
+        "__a",
         F.explode(
             F.slice(
-                F.col("__ids"),
+                F.col("__p"),
                 F.col("__i") + F.lit(2),
-                F.size("__ids") - F.col("__i") - F.lit(1),
+                F.size("__p") - F.col("__i") - F.lit(1),
             )
-        ).alias("id_b"),
+        ).alias("__b"),
+    ).select(
+        F.col("__a").getField(id_col).alias("id_a"),
+        F.col("__b").getField(id_col).alias("id_b"),
+        (
+            F.col("__a").getField("n_shingles")
+            + F.col("__b").getField("n_shingles")
+        ).alias("__sizes"),
     )
     # The pair-count aggregate is THE wall of exact mining: ~sum(L²)
     # generated rows, ~94% of them DISTINCT pairs on uniform corpora
     # (measured x10: 88.2M generated / 82.7M distinct), so map-side
-    # partial aggregation reduces almost nothing while building a
-    # multi-million-entry hash map per map task, and the aggregate
-    # inherits whatever spark.sql.shuffle.partitions the session set
-    # for ordinary (10²-10⁵ row) reduce inputs. Repartition the slim
-    # (id_a, id_b) rows FIRST at a width derived from the cluster
-    # (cores-proportional, env-overridable) so the partial+final
-    # aggregate pair runs post-exchange at full parallelism with a
-    # cache-sized hash table per task (guide §2.2 fewer-but-right-
-    # sized partitions; measured x10: 15.9 s → 7.9 s for the count
-    # stage, 17.6 s → 9.7 s full-pipeline noop, values identical).
+    # partial aggregation reduces almost nothing. Repartition the slim
+    # pair rows FIRST at a cores-proportional width (floored by the
+    # session's shuffle.partitions) so the partial+final aggregate runs
+    # post-exchange at full parallelism with a cache-sized hash table
+    # per task (measured x10: 15.9 s → 7.9 s for the count stage).
+    # __sizes is a function of the ids, so grouping on it adds no
+    # groups and the (id_a, id_b) hash partitioning already clusters
+    # all three keys — no second exchange.
     spark = df.sparkSession
     npart = max(
-        int(os.environ.get("SPARK_GRAFT_PAIR_AGG_FACTOR", "4"))
-        * spark.sparkContext.defaultParallelism,
+        4 * spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     common = (
         pairgen.repartition(npart, "id_a", "id_b")
-        .groupBy("id_a", "id_b")
+        .groupBy("id_a", "id_b", "__sizes")
         .agg(F.count("*").alias("common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("size_b"))
-    pairs = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
+    return common.select(
+        "id_a",
+        "id_b",
+        (
             F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= F.lit(float(threshold)))
-    )
-    return pairs.select("id_a", "id_b", "jaccard")
+            / (F.col("__sizes") - F.col("common"))
+        ).alias("jaccard"),
+    ).filter(F.col("jaccard") >= F.lit(float(threshold)))
 
 
 def _minhash_band_udf(num_hashes: int, bands: int, n: int, text_col: str):

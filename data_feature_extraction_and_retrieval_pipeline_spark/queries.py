@@ -296,7 +296,8 @@ def register(name: str, oracle: str | None = None):
 # tools/freshness_report.py and asserted current by
 # tests/test_driver_contract.py.
 _DRIVER_ORDER: list[str] = [
-    # -- round-14 plan changes (floor 14 => head): the pair-mining
+    # -- round-14 plan changes (floor 14 => head; the two pair-mining
+    # queries are at floor 15 for the sizes-in-postings plan): the pair-mining
     # repartition + Generate-edge label propagation, the dup-injection
     # fixture Generates, the single-reference stopword/hash-split
     # expression fixes, the leveled salted-funnel chains, and the
@@ -601,9 +602,11 @@ _TOUCHED: dict[str, int] = {
     # -- round 14 (optimization round 2): plan changes, values
     # identical; every entry re-certified by the r14 driver head.
     # Pair mining: scale-adaptive repartition before the pair-count
-    # aggregate + Generate-form edges in label propagation
-    "dedup_ngram_jaccard": 14,
-    "dedup_cluster_canonical": 14,
+    # aggregate + Generate-form edges in label propagation; r15: the
+    # shingle counts ride in the posting lists (no size frame or size
+    # joins) and a NULL text no longer pairs
+    "dedup_ngram_jaccard": 15,
+    "dedup_cluster_canonical": 15,
     # dup-injection fixtures: 3-branch unions -> one Generate /
     # when-chain projection over a single scan
     "dedup_exact": 14,

@@ -599,15 +599,58 @@ class TestEventsAnalytics:
         assert out == {1: 2}
 
 
-def _probed(spark, fn, group):
-    """(result of fn(), whether it ran a Spark job) via a job group."""
+def _jobs_run(spark, fn, group):
+    """(result of fn(), number of Spark jobs it ran) via a job group."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         out = fn()
-        return out, bool(sc.statusTracker().getJobIdsForGroup(group))
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
+
+
+def _probed(spark, fn, group):
+    """(result of fn(), whether it ran a Spark job) via a job group."""
+    out, n = _jobs_run(spark, fn, group)
+    return out, bool(n)
+
+
+@pytest.mark.parametrize("mode", ["segment", "hybrid"])
+def test_search_content_passes_segments_as_rows(spark, content_engine, mode):
+    """The content path hands its driver-held query segments to the
+    operators as rows: building the plan runs no Spark job, the request
+    runs fewer jobs than the same rows sent as a frame (which the
+    operators collect straight back), and the ids are unchanged."""
+    clip = lambda: _FakeClip()  # noqa: E731
+    qvec, seg_rows = content_engine._encode_query(
+        _PAYLOAD, "query.jpg", mode, model_loader=clip
+    )
+    assert seg_rows
+
+    def via_rows():
+        df, n_build = _jobs_run(
+            spark,
+            lambda: content_engine.search_content(
+                _PAYLOAD, mode=mode, model_loader=clip
+            ),
+            f"rows-build-{mode}",
+        )
+        assert n_build == 0
+        return df.collect()
+
+    def via_frame():
+        frame = spark.createDataFrame(
+            seg_rows, "q_segment_id long, features array<float>"
+        )
+        return content_engine.search(
+            mode, query_vec=qvec, query_segments=frame
+        ).collect()
+
+    rows, n_rows = _jobs_run(spark, via_rows, f"rows-{mode}")
+    framed, n_frame = _jobs_run(spark, via_frame, f"frame-{mode}")
+    assert rows == framed
+    assert n_rows < n_frame
 
 
 def test_embedding_dim_probed_once_per_table_epoch(spark):

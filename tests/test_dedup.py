@@ -5,6 +5,10 @@ blocking) are checked against their exact counterparts.
 
 from __future__ import annotations
 
+import itertools
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,6 +50,62 @@ def test_exact_dedup_finds_injected_copies(spark, docs_with_dups):
         F.sum("group_size") - F.count("*")
     ).first()[0]
     assert dup_members >= n_copies
+
+
+def _py_shingles(text, n):
+    """Distinct word n-grams the way the operator defines them: ASCII
+    whitespace split of the lowercased text, empty tokens dropped; a
+    text shorter than n tokens is one shingle (its joined tokens, ""
+    for an empty text); a NULL text has none."""
+    if text is None:
+        return set()
+    toks = [t for t in re.split(r"\s+", text.lower(), flags=re.ASCII) if t]
+    if len(toks) < n:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _py_jaccard_pairs(rows, n, threshold):
+    sh = {i: _py_shingles(t, n) for i, t in rows}
+    out = {}
+    for a, b in itertools.combinations(sorted(sh), 2):
+        common = len(sh[a] & sh[b])
+        if common:
+            j = common / (len(sh[a]) + len(sh[b]) - common)
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def test_ngram_jaccard_matches_python_reference(spark):
+    """Exact pair values against a pure-Python Jaccard over edge cases
+    (NULL text, empty and all-whitespace text sharing the "" shingle,
+    docs shorter than n tokens, shingles repeated within a doc) and a
+    small-vocabulary random corpus with many partial overlaps."""
+    rows = [
+        (1, None), (2, None),
+        (3, ""), (4, " \t "),
+        (5, "a b"), (6, "A  b"), (7, "a"),
+        (8, "a b c a b c"), (9, "a b c a b c a b c"), (10, "a b c"),
+        (11, "x y z x y z w"), (12, "x y z w"),
+    ]
+    rng = random.Random(7)
+    vocab = ["red", "green", "blue", "cyan", "pink"]
+    rows += [
+        (100 + i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 8))))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for n, threshold in ((3, 0.5), (3, 0.2), (2, 0.5)):
+        want = _py_jaccard_pairs(rows, n, threshold)
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(df, n=n, threshold=threshold).collect()
+        }
+        assert got.keys() == want.keys(), (n, threshold)
+        for k, j in want.items():
+            assert got[k] == pytest.approx(j, abs=1e-12), (n, threshold, k)
+    assert (1, 2) not in got and (3, 4) in got and (8, 9) in got
 
 
 def test_minhash_lsh_pairs_subset_of_exact(spark, docs_with_dups):

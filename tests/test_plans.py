@@ -165,13 +165,12 @@ def test_pack_bins_single_exchange(spark, qs):
 
 
 def test_ngram_jaccard_single_corpus_shuffle(spark):
-    """ngram_jaccard_pairs (r12 posting-list form): never persists the
+    """ngram_jaccard_pairs (posting-list form): never persists the
     corpus-scale (doc × shingle) explode (no InMemoryTableScan), no
-    cartesian, no self-join of the explode at all — the corpus
-    shuffles ONCE (on shingle) into posting lists, pairs stream out of
-    two Generates, and the only other exchanges are pair/size-keyed.
-    The former SortMergeJoin shape double-sorted the shingle strings
-    even with its exchange reused."""
+    cartesian, no join at all — the corpus shuffles ONCE (on shingle)
+    into posting lists that carry each document's shingle count,
+    pairs stream out of two Generates, and the only other exchange is
+    pair-keyed."""
     from data_feature_extraction_and_retrieval_pipeline_spark.operators import (
         ngram_jaccard_pairs,
     )
@@ -179,13 +178,22 @@ def test_ngram_jaccard_single_corpus_shuffle(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
-    text = _plan_text(ngram_jaccard_pairs(docs))
+    pairs = ngram_jaccard_pairs(docs)
+    text = _plan_text(pairs)
     assert "InMemoryTableScan" not in text
     assert "CartesianProduct" not in text
     assert "SortMergeJoin" not in text, "no shingle self-join"
     assert text.count("collect_list") >= 1  # posting lists
     # exactly one exchange partitioned on the shingle key
     assert text.count("hashpartitioning(shingle") == 1, text[:2000]
+    # the shingle counts ride in the posting lists: the text is
+    # tokenized and shingled once (n=3 nests two zip_with), no size
+    # frame is joined back, and no inferred filter re-embeds either tree
+    opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("split(") == 1, opt
+    assert opt.count("zip_with(") == 2, opt
+    assert "Join" not in opt, opt
+    assert "coalesce(size(" not in opt, opt
 
 
 def test_portable_pq_serving_plan_is_jvm_only(spark, qs):

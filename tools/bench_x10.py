@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -73,6 +74,7 @@ def main() -> int:
 
     import scale_check
     import scaling_report
+    from bench import trailing_artifacts
     from data_feature_extraction_and_retrieval_pipeline_spark import (
         caching,
         indexes,
@@ -207,42 +209,48 @@ def main() -> int:
     #      artifact over shared query names (a plan change moves a few
     #      queries; contention moves the median of all of them)
     # The current round's own artifact is excluded from the trailing
-    # set so a re-run never dampens its own detection (ADVICE r12).
-    trailing = []          # job_floor_s of prior rounds
-    trailing_oracle = []   # oracle_total of prior rounds
-    prev_queries = None    # per-query walls of the most recent round
-    # per-query oracle walls of prior CLEAN artifacts: the over-2x bin
-    # pins each query's denominator to the median of (trailing clean
-    # values + this run), so bin membership stops churning with one
-    # run's DuckDB contention (VERDICT r13 'What's wrong #3')
+    # set so a re-run never dampens its own detection (ADVICE r12),
+    # and only artifacts at this run's (mult, cpus) count.
+    history = trailing_artifacts(
+        "BENCH_x10_r*.json",
+        exclude=f"BENCH_x10_r{rnd:02d}.json",
+        mult=mult,
+        cpus=int(CPUS),
+    )
+    trailing = [  # job_floor_s of prior rounds
+        float(d["job_floor_s"])
+        for d in history
+        if isinstance(d.get("job_floor_s"), (int, float))
+    ]
+    # oracle totals and per-query oracle walls of prior CLEAN
+    # artifacts — a contended oracle total must not poison the
+    # trailing median. The over-2x bin pins each query's denominator
+    # to the median of (trailing clean values + this run), so bin
+    # membership stops churning with one run's DuckDB contention
+    # (VERDICT r13 'What's wrong #3')
+    clean = [
+        d for d in history
+        if isinstance(d.get("oracle_total"), (int, float))
+        and not d.get("noisy_run")
+    ]
+    trailing_oracle = [float(d["oracle_total"]) for d in clean]
     trailing_oracle_q: dict[str, list[float]] = {}
-    self_artifact = f"BENCH_x10_r{rnd:02d}.json"
-    for p in sorted(REPO.glob("BENCH_x10_r*.json")):
-        if p.name == self_artifact:
-            continue
-        try:
-            doc = json.loads(p.read_text())
-        except Exception:
-            continue
-        if doc.get("mult", 10) != mult:
-            continue  # a --mult probe must not poison the medians
-        v = doc.get("job_floor_s")
-        if isinstance(v, (int, float)):
-            trailing.append(float(v))
-        ot = doc.get("oracle_total")
-        # skip denominators from runs that flagged themselves noisy —
-        # a contended oracle total must not poison the trailing median
-        if isinstance(ot, (int, float)) and not doc.get("noisy_run"):
-            trailing_oracle.append(float(ot))
-            oq = doc.get("oracle_queries")
-            if isinstance(oq, dict):
-                for n, val in oq.items():
-                    if isinstance(val, (int, float)):
-                        trailing_oracle_q.setdefault(n, []).append(float(val))
-        q = doc.get("queries")
-        if isinstance(q, dict) and q:
-            prev_queries = q
-    floor_median = sorted(trailing)[len(trailing) // 2] if trailing else None
+    for d in clean:
+        oq = d.get("oracle_queries")
+        if isinstance(oq, dict):
+            for n, val in oq.items():
+                if isinstance(val, (int, float)):
+                    trailing_oracle_q.setdefault(n, []).append(float(val))
+    # per-query walls of the most recent round
+    prev_queries = next(
+        (
+            d["queries"]
+            for d in reversed(history)
+            if isinstance(d.get("queries"), dict) and d["queries"]
+        ),
+        None,
+    )
+    floor_median = statistics.median(trailing) if trailing else None
     noisy_floor = False
     if floor_median is not None and floor > 1.5 * floor_median:
         print(
@@ -255,13 +263,13 @@ def main() -> int:
     # signal 3: median per-query wall drift vs the previous artifact
     wall_drift = None
     if prev_queries:
-        drifts = sorted(
+        drifts = [
             timings[n] / prev_queries[n]
             for n in timings
             if n in prev_queries and prev_queries[n] > 0
-        )
+        ]
         if drifts:
-            wall_drift = round(drifts[len(drifts) // 2], 3)
+            wall_drift = round(statistics.median(drifts), 3)
     noisy_wall = wall_drift is not None and wall_drift > 1.5
 
     con = duckdb.connect()
@@ -288,9 +296,7 @@ def main() -> int:
     # and a slow denominator flatters ratio_total (r12's 0.173).
     oracle_total = round(sum(oracle_timings.values()), 3)
     oracle_median_trailing = (
-        sorted(trailing_oracle)[len(trailing_oracle) // 2]
-        if trailing_oracle
-        else None
+        statistics.median(trailing_oracle) if trailing_oracle else None
     )
     noisy_oracle = (
         oracle_median_trailing is not None
@@ -324,8 +330,7 @@ def main() -> int:
     # the pinned value only decides the bins).
     oracle_pinned = {}
     for n, o in oracle_timings.items():
-        vals = sorted(trailing_oracle_q.get(n, []) + [o])
-        oracle_pinned[n] = vals[len(vals) // 2]
+        oracle_pinned[n] = statistics.median(trailing_oracle_q.get(n, []) + [o])
     measurable = {n for n, o in oracle_pinned.items() if o >= 0.1}
     over = {
         n for n in measurable
