@@ -277,6 +277,17 @@ def main() -> None:
     # pays ~4 scheduling slices of pure overhead — so the triage needs
     # the count next to the time (SCALING.md "floor" section).
     jobs_per_query: dict[str, int] = {}
+    # Probes the bench survives without (job counts, oracle timings):
+    # each failure is listed in bench_detail.json by stage, query and
+    # exception type, so a short map is never mistaken for a full one.
+    failures: list[dict] = []
+
+    def _failed(stage: str, query: str | None, exc: Exception) -> None:
+        failures.append(
+            {"stage": stage, "query": query, "error": type(exc).__name__}
+        )
+        print(f"bench: {stage} {query}: {exc!r}", file=sys.stderr)
+
     sc = spark.sparkContext
     for name in HEADLINE:
         fn = qs[name]
@@ -296,8 +307,8 @@ def main() -> None:
                             f"bench:{name}"
                         )
                     )
-                except Exception:
-                    pass
+                except Exception as e:
+                    _failed("job_count", name, e)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
             # intra-query persists (minhash shingles, hybrid phase-1)
@@ -334,10 +345,14 @@ def main() -> None:
                 con.execute(
                     f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')"
                 )
-        for name in HEADLINE:
-            sql = oracles.get(name)
-            if sql is None:
-                continue
+    except Exception as e:
+        _failed("oracle_setup", None, e)
+        con = None
+    for name in HEADLINE if con is not None else ():
+        sql = oracles.get(name)
+        if sql is None:
+            continue
+        try:
             con.execute(sql).fetchall()
             best = None
             for _ in range(2):
@@ -346,8 +361,8 @@ def main() -> None:
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             oracle_timings[name] = round(best, 4)
-    except Exception:
-        pass
+        except Exception as e:
+            _failed("oracle", name, e)
 
     total = round(sum(timings.values()), 3)
     spark_oracled = round(
@@ -466,6 +481,10 @@ def main() -> None:
         # against this: a query at 3× with 5 jobs is pure scheduling
         # overhead (5 × job_floor_s), not a plan defect
         "jobs_per_query": jobs_per_query,
+        # probes that raised (job counts, oracle set-up and timings):
+        # a query missing from jobs_per_query or oracle_queries is
+        # listed here with its exception type
+        "failures": failures,
         "resident_index_artifacts": resident,
         # one-time from-scratch build cost of each resident
         # artifact (indexes.py materializes + times them); the

@@ -28,17 +28,17 @@ path stays the system of record; the hot tier is a view of it.
 Scale posture (the 100 TB story):
 
 - The resident artifact holds ONLY the serving columns — ids +
-  vectors + the flat tag arrays — at 8·n·dim bytes of float64 per vector
-  table, or 4·n·dim with a ``save(dtype="float32")`` artifact (the
-  source precision: CLIP emits float32). One driver comfortably holds
-  ~10M×64d (~5 GB) at float64, ~20M×64d at float32; past that the
-  deployment shards: partition the vectors by id range across N
-  serving processes (each built by the same Spark job writing N
-  artifacts), scatter the query, merge the per-shard top-k — exact,
-  because every mode's score is per-image and the final cut is a
-  k-way merge on the same (rounded score, id) order. This is the
-  reference's posture too: ES scales script_score by sharding the
-  index, not by making one shard bigger.
+  vectors + the flat tag arrays — with each vector matrix at its
+  source column's precision: 4·n·dim bytes for a float32 column (the
+  archive's CLIP vectors: extract_clip_features.py emits float32),
+  8·n·dim for a float64 one. One driver comfortably holds ~20M×64d
+  (~5 GB) of float32; past that the deployment shards: partition the
+  vectors by id range across N serving processes (each built by the
+  same Spark job writing N artifacts), scatter the query, merge the
+  per-shard top-k — exact, because every mode's score is per-image
+  and the final cut is a k-way merge on the same (rounded score, id)
+  order. This is the reference's posture too: ES scales script_score
+  by sharding the index, not by making one shard bigger.
 - Freshness: the artifact is immutable once built, like the parquet
   snapshot it came from; refresh = rebuild from the current tables
   (``Engine.hot(rebuild=True)``). Streaming ingest appends via the
@@ -48,16 +48,20 @@ Scale posture (the 100 TB story):
   analytics, curation — stays on the Spark plans. ``serve(...,
   hot=False)`` keeps the pure-Spark serving path alive and tested.
 
-Float discipline: per-pair similarities are numpy matmuls in the
-RESIDENT MATRIX'S dtype. The live/float64 tier is bit-identical to
-the operator layer's Arrow path (functions/vectors.py ``dot_batch``
-is the same matmul); the whole-image dot accumulates in SIMD-blocked
-order where the JVM HOF folds left-to-right; results agree to ~1e-13,
+Float discipline: every score the tier serves is decided in float64,
+whatever the matrix dtype. A float64 matrix is scored directly — the
+same matmul as the operator layer's Arrow path (functions/vectors.py
+``dot_batch``). A float32 matrix is never widened whole: the whole-
+image top-k runs a float32 screen (``mat @ q32``) and keeps every row
+within twice a rigorous rounding bound of the k-th screened score
+(``_whole_top``), then widens those survivors — exactly — and rescores
+them in float64; segment scoring widens only the candidate rows it
+slices. So the served rows are the float64 rows, for either dtype, and
+a saved artifact (matrices stored verbatim) scores bit for bit like
+the live one. The whole-image dot accumulates in SIMD-blocked order
+where the JVM HOF folds left-to-right; results agree to ~1e-13,
 absorbed by the 1e-6 rounded-score ordering the engine certifies
-under (queries.py module header). A float32 artifact scores in
-float32 — ~1e-7 relative quantization vs the float64 tier, same
-1e-6-rounding absorption, pinned at 1e-6 tolerance in
-tests/test_serving.py. Display rounding replicates Spark's
+under (queries.py module header). Display rounding replicates Spark's
 HALF_UP-on-shortest-decimal exactly.
 """
 
@@ -94,11 +98,11 @@ def round_half_up(x: float, digits: int = 6) -> float:
     )
 
 
-def _topk_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
-    """Indices of the top-k rows under (score DESC, id ASC) — the
-    engine's deterministic tiebreak order."""
-    order = np.lexsort((ids, -scores))
-    return order[: int(k)]
+def _f32_floor(x: float) -> np.float32:
+    """The largest float32 at or below ``x`` (a screen threshold must
+    never round up past a row it has to keep)."""
+    f = np.float32(x)
+    return np.nextafter(f, np.float32(-np.inf)) if float(f) > x else f
 
 
 class TagRows:
@@ -200,18 +204,26 @@ class HotSearchIndex:
         self.image_ids = image_ids
         self.image_mat = image_mat
         self.dim = int(image_mat.shape[1]) if image_mat is not None else None
-        # segment rows sorted by image id → per-image contiguous slices
-        # (reduceat group boundaries), the layout every segment-mode
-        # aggregation walks; from_engine and load hand them over sorted
+        # the float32 screen's bound needs the largest row norm: summed
+        # in float64 once here, row by row (no full-size temporary)
+        self.image_maxnorm = None
+        if image_mat is not None and image_mat.dtype == np.float32 and image_mat.size:
+            sq = np.einsum("ij,ij->i", image_mat, image_mat, dtype=np.float64)
+            self.image_maxnorm = float(np.sqrt(sq.max()))
+        # segment rows sorted by image id → per-image contiguous slices:
+        # group i (image seg_groups[i]) is rows seg_offsets[i] to
+        # seg_offsets[i + 1]; from_engine and load hand them over sorted
         if seg_mat is not None and len(seg_image_ids):
             if (seg_image_ids[1:] < seg_image_ids[:-1]).any():
                 order = np.argsort(seg_image_ids, kind="stable")
                 seg_image_ids, seg_mat = seg_image_ids[order], seg_mat[order]
             self.seg_image_ids = seg_image_ids
             self.seg_mat = seg_mat
-            self.seg_groups = np.unique(seg_image_ids)
+            self.seg_groups, starts = np.unique(seg_image_ids, return_index=True)
+            self.seg_offsets = np.append(starts, len(seg_image_ids))
         else:
-            self.seg_image_ids = self.seg_mat = self.seg_groups = None
+            self.seg_image_ids = self.seg_mat = None
+            self.seg_groups = self.seg_offsets = None
         self.tag_rows = tag_rows
 
     # -- build ---------------------------------------------------------
@@ -221,11 +233,10 @@ class HotSearchIndex:
         """Collect the serving artifact from an Engine's tables — the
         hot tier's "index build". One ``toArrow()`` per table, projected
         to the serving columns only (P1 pruning: ids + vectors + tags).
-        Each vector matrix is read from the Arrow list column's flat
-        values buffer and widened to float64 once (exact from float32;
-        a float64 column is used in place, read-only); segments are put
-        in image-id order before the widening, so no second float64
-        copy is ever made."""
+        Each vector matrix is the Arrow list column's flat values buffer
+        in the column's own dtype — 4·n·dim bytes for the archive's
+        float32 vectors, never widened — used in place (read-only) for
+        images and copied once into image-id order for segments."""
         col = engine.image_col
 
         def table(df, vec_col):
@@ -236,14 +247,14 @@ class HotSearchIndex:
         if engine.images is not None:
             ids, vecs = table(engine.images, "embedding")
             img_ids = _ids(ids)
-            img_mat = _vectors(vecs).astype(np.float64, copy=False)
+            img_mat = _vectors(vecs)
         seg_ids = seg_mat = None
         if engine.segments is not None:
             ids, vecs = table(engine.segments, "clip_features")
             seg_ids = _ids(ids)
             order = np.argsort(seg_ids, kind="stable")
             seg_ids = seg_ids[order]
-            seg_mat = _vectors(vecs)[order].astype(np.float64, copy=False)
+            seg_mat = _vectors(vecs)[order]
         tag_rows = None
         if engine.segment_tags is not None:
             tag_rows = TagRows.from_arrow(*table(engine.segment_tags, "tags"))
@@ -253,7 +264,7 @@ class HotSearchIndex:
 
     # -- durable artifact (build once with Spark, serve forever) --------
 
-    def save(self, path: str, dtype: str | None = None) -> str:
+    def save(self, path: str) -> str:
         """Serialize the artifact to one ``.npz`` file — the durable
         half of the reference's build-once/serve-forever split
         (upload_features_to_elasticsearch.py:207-229 writes the ES
@@ -262,31 +273,20 @@ class HotSearchIndex:
         :class:`ShardedHotIndex` — boots from this file via
         :meth:`load` with numpy alone: no SparkSession, no JVM.
 
-        Layout: ids + matrices verbatim (already sorted), tag rows as
-        their four resident arrays (row ids, per-row pair counts,
-        names, confidences) — no pickle anywhere, so the file is
+        Layout: ids + matrices verbatim (already sorted, in the
+        resident dtype — 4·n·dim bytes per float32 source table), tag
+        rows as their four resident arrays (row ids, per-row pair
+        counts, names, confidences) — no pickle anywhere, so the file is
         portable across Python versions and safe to load from shared
-        storage.
-
-        ``dtype="float32"`` stores the vector matrices at 4 bytes per
-        value — halving shard RSS and doubling the per-process ceiling
-        to ~20M×64d — which matches the SOURCE precision: CLIP emits
-        512-d float32 (extract_clip_features.py), so the float64 tier
-        carries no extra information to begin with. A loaded float32
-        shard scores in float32 (queries are cast to the matrix dtype
-        — no hidden float64 temp copy of the matrix at matmul time);
-        scores differ from the float64 tier by ≤ ~1e-7 relative
-        quantization, absorbed by the engine's 1e-6 rounded-score
-        ordering except for exact ties at the rounding boundary
-        (equivalence pinned at 1e-6 in tests/test_serving.py)."""
-        cast = (lambda m: m.astype(np.dtype(dtype))) if dtype else (lambda m: m)
+        storage. A loaded artifact holds the same matrices as the live
+        one, so it scores bit for bit like it."""
         data: dict = {"image_col": np.asarray(self.image_col)}
         if self.image_mat is not None:
             data["image_ids"] = self.image_ids
-            data["image_mat"] = cast(self.image_mat)
+            data["image_mat"] = self.image_mat
         if self.seg_mat is not None:
             data["seg_image_ids"] = self.seg_image_ids
-            data["seg_mat"] = cast(self.seg_mat)
+            data["seg_mat"] = self.seg_mat
         if self.tag_rows is not None:
             t = self.tag_rows
             data.update(
@@ -320,38 +320,78 @@ class HotSearchIndex:
 
     # -- shared scoring kernels -----------------------------------------
 
-    def _whole_scores(self, query_vec, allowed):
-        """(ids, calibrated whole scores), restricted to ``allowed``."""
-        # query cast to the MATRIX dtype: a float32 artifact scores in
-        # float32 (mixed-dtype matmul would silently materialize a
-        # float64 copy of the whole matrix for BLAS)
-        q = np.asarray([float(x) for x in query_vec], dtype=self.image_mat.dtype)
-        scores = self.image_mat @ q + 1.0
-        ids = self.image_ids
+    def _whole_top(self, query_vec, allowed, k: int):
+        """(ids, calibrated whole scores) of the top ``k`` rows under
+        (score DESC, id ASC) — the engine's deterministic tiebreak
+        order — restricted to ``allowed``, every score decided in
+        float64.
+
+        A float32 matrix is screened first: ``s̃ = mat @ q32`` in float32
+        is within ``eps = γ·maxnorm·‖q‖ + maxnorm·‖q32 − q‖`` of each
+        row's exact dot, ``γ = (d+2)u / (1 − (d+2)u)``, ``u = 2⁻²⁴``
+        (the dot-product rounding bound for any summation order, with
+        a ``u`` of slack that covers the float64 decision's own
+        rounding), plus ``d·2⁻¹⁴⁹`` for underflow. A row screened below
+        ``s̃_(k) − 2·eps`` is then strictly below the k-th float64
+        score, so the survivors — every true top-k row and every tie
+        at the cut — are widened (exact) and rescored in float64."""
+        mat, ids = self.image_mat, self.image_ids
+        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
+        rows = None
         if allowed is not None:
-            keep = np.isin(ids, _id_array(allowed))
-            ids, scores = ids[keep], scores[keep]
-        return ids, scores
+            rows = np.flatnonzero(np.isin(ids, _id_array(allowed)))
+        n, k = (len(ids) if rows is None else len(rows)), int(k)
+        qnorm = float(np.linalg.norm(q))
+        # the screen needs k < n and a finite bound far from float32
+        # overflow (the comparison is False for NaN)
+        if self.image_maxnorm is not None and 0 < k < n and (
+            self.image_maxnorm * qnorm < 2.0**100
+        ):
+            q32 = q.astype(np.float32)
+            approx = mat @ q32
+            if rows is not None:
+                approx = approx[rows]
+            d = mat.shape[1]
+            g = (d + 2) * 2.0**-24
+            eps = (
+                self.image_maxnorm
+                * (g / (1 - g) * qnorm + float(np.linalg.norm(q32 - q)))
+                + d * 2.0**-149
+            )
+            cut = float(np.partition(approx, n - k)[n - k])
+            keep = np.flatnonzero(approx >= _f32_floor(cut - 2 * eps))
+            rows = keep if rows is None else rows[keep]
+        if rows is not None:
+            mat, ids = mat[rows], ids[rows]
+        scores = mat.astype(np.float64, copy=False) @ q + 1.0
+        take = np.lexsort((ids, -scores))[:k]
+        return ids[take], scores[take]
 
     def _segment_scores(self, images, query_rows) -> list[tuple]:
         """The W4 argmax kernel: for each of ``images`` that has
-        segments, ``(id, avg, max)`` over the per-query-segment max
-        cosines. Same float64 matmul as the Arrow path
-        (vectors.dot_batch), grouped with reduceat over the image-
-        sorted layout; the avg sums left to right, like the Catalyst
-        column sum."""
-        rows = np.flatnonzero(np.isin(self.seg_image_ids, images))
-        if not len(rows):
+        segments, in id order, ``(id, avg, max)`` over the
+        per-query-segment max cosines. The image's rows come from the
+        group offsets; only those rows are widened to float64 and
+        scored with the same float64 matmul as the Arrow path
+        (vectors.dot_batch), grouped with reduceat; the avg sums left
+        to right, like the Catalyst column sum."""
+        images = np.unique(images)
+        groups = self.seg_groups
+        pos = np.minimum(np.searchsorted(groups, images), len(groups) - 1)
+        pos = pos[groups[pos] == images]
+        if not len(pos):
             return []
+        lo = self.seg_offsets[pos]
+        lens = self.seg_offsets[pos + 1] - lo
+        starts = np.cumsum(lens) - lens  # each group's first gathered row
+        rows = np.repeat(lo - starts, lens) + np.arange(int(lens.sum()))
         qmat = np.asarray(
-            [[float(x) for x in v] for _, v in query_rows],
-            dtype=self.seg_mat.dtype,
+            [[float(x) for x in v] for _, v in query_rows], dtype=np.float64
         )
-        sims = self.seg_mat[rows] @ qmat.T  # (n_rows, Q)
-        groups, starts = np.unique(self.seg_image_ids[rows], return_index=True)
-        maxima = np.maximum.reduceat(sims, starts, axis=0)
+        sims = self.seg_mat[rows].astype(np.float64, copy=False) @ qmat.T
+        maxima = np.maximum.reduceat(sims, starts, axis=0)  # (groups, Q)
         out = []
-        for g, row in zip(groups.tolist(), maxima):
+        for g, row in zip(groups[pos].tolist(), maxima):
             total = 0.0 + row[0]
             for x in row[1:]:
                 total = total + x
@@ -365,11 +405,10 @@ class HotSearchIndex:
     ) -> list[dict]:
         """retrieval.knn twin: score = dot + 1.0, (score DESC, id ASC),
         top k → [{image_col, score}]."""
-        ids, scores = self._whole_scores(query_vec, allowed)
-        take = _topk_order(scores, ids, k)
+        ids, scores = self._whole_top(query_vec, allowed, k)
         return [
-            {self.image_col: ids[i].item(), "score": float(scores[i])}
-            for i in take
+            {self.image_col: i, "score": s}
+            for i, s in zip(ids.tolist(), scores.tolist())
         ]
 
     def segment(
@@ -414,15 +453,15 @@ class HotSearchIndex:
         the calibrated whole score, phase-2 segment avg-of-maxima (raw
         cosine) for pool members only, missing → 0.0, hybrid =
         w·whole + w·segment, (round6(hybrid) DESC, id ASC)."""
-        ids, scores = self._whole_scores(query_vec, allowed)
-        take = _topk_order(scores, ids, max(int(top_k) * 20, 100))
-        pool_ids = ids[take]
+        pool_ids, pool_scores = self._whole_top(
+            query_vec, allowed, max(int(top_k) * 20, 100)
+        )
         seg_by_id = (
             {g: a for g, a, _ in self._segment_scores(pool_ids, query_rows)}
             if self.seg_mat is not None
             else {}
         )
-        whole_by_id = dict(zip(pool_ids.tolist(), scores[take].tolist()))
+        whole_by_id = dict(zip(pool_ids.tolist(), pool_scores.tolist()))
         ww, ws = float(whole_weight), float(segment_weight)
         out = []
         for g, w in whole_by_id.items():
@@ -562,19 +601,15 @@ class ShardedHotIndex:
         image_col = shards[0].image_col if shards else "image_id"
         return cls(shards, image_col)
 
-    def save_shards(
-        self, directory: str, dtype: str | None = None
-    ) -> list[str]:
+    def save_shards(self, directory: str) -> list[str]:
         """Write each shard to ``{directory}/shard-{i}.npz`` and return
         the paths (the Spark-side build writes the same split with one
-        ``pmod(id, n)`` partition column; ``from_paths`` reloads).
-        ``dtype`` forwards to :meth:`HotSearchIndex.save` —
-        ``"float32"`` halves every shard's resident footprint."""
+        ``pmod(id, n)`` partition column; ``from_paths`` reloads)."""
         import os
 
         os.makedirs(directory, exist_ok=True)
         return [
-            s.save(os.path.join(directory, f"shard-{i}.npz"), dtype=dtype)
+            s.save(os.path.join(directory, f"shard-{i}.npz"))
             for i, s in enumerate(self.shards)
         ]
 

@@ -398,7 +398,7 @@ def _mode_rows(idx, qvec, seg_rows):
 def test_save_load_roundtrip_spark_free(engine, tmp_path):
     """Build via Spark, save, load the .npz — the loaded copy must
     answer every mode with the exact rows of the live-built artifact
-    (same float64 bits: the matrices round-trip verbatim), and loading
+    (same bits: the matrices round-trip verbatim), and loading
     itself must not touch the SparkSession (serving.py imports no
     pyspark; the subprocess test below proves the boot path end to
     end)."""
@@ -420,7 +420,7 @@ def test_save_load_roundtrip_spark_free(engine, tmp_path):
     built, reloaded = _mode_rows(hot, qvec, seg_rows), _mode_rows(
         loaded, qvec, seg_rows
     )
-    assert built == reloaded  # bit-exact: same resident float64 data
+    assert built == reloaded  # bit-exact: same resident matrices
 
 
 def test_load_boots_without_pyspark(engine, tmp_path):
@@ -589,13 +589,9 @@ def test_hot_stale_probe_sees_external_growth(spark):
 
 
 def test_save_load_float32_artifact(engine, tmp_path):
-    """dtype="float32" artifact: half-width on disk and resident, and
-    every mode's rows match the float64 tier at 1e-6 — the engine's
-    rounded-score tolerance (the stored vectors are float32-quantized
-    and scoring runs in float32, so bits differ below ~1e-7 relative;
-    CLIP's native precision is float32 so no information is lost)."""
-    import os
-
+    """The archive's vectors are float32, and the artifact keeps them at
+    that width — resident, on disk and after a load — so the loaded
+    copy answers every mode with exactly the live copy's rows."""
     import numpy as np
 
     from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
@@ -603,58 +599,225 @@ def test_save_load_float32_artifact(engine, tmp_path):
     )
 
     hot = engine.hot(rebuild=True)
-    p64 = str(tmp_path / "hot64.npz")
-    p32 = str(tmp_path / "hot32.npz")
-    hot.save(p64)
-    hot.save(p32, dtype="float32")
-    assert os.path.getsize(p32) < os.path.getsize(p64)
-
-    loaded = HotSearchIndex.load(p32)
-    assert loaded.image_mat.dtype == np.float32
-    assert loaded.seg_mat is None or loaded.seg_mat.dtype == np.float32
+    assert hot.image_mat.dtype == np.float32
+    assert hot.seg_mat.dtype == np.float32
+    path = str(tmp_path / "hot.npz")
+    loaded = HotSearchIndex.load(hot.save(path))
+    _assert_bits_equal(loaded.image_mat, hot.image_mat)
+    _assert_bits_equal(loaded.seg_mat, hot.seg_mat)
     assert loaded.dim == hot.dim
 
     qvec, seg_rows = engine._encode_query(
         PAYLOADS[3], "q.png", "hybrid", dim=hot.dim,
         model_loader=lambda: None,
     )
-    _assert_rows_equal(loaded.whole(qvec, 7), hot.whole(qvec, 7), 1e-6)
-    _assert_rows_equal(
-        loaded.segment(seg_rows, 5, candidate_cap=15),
-        hot.segment(seg_rows, 5, candidate_cap=15), 1e-6,
-    )
-    _assert_rows_equal(
-        loaded.hybrid(qvec, seg_rows, 5),
-        hot.hybrid(qvec, seg_rows, 5), 1e-6,
-    )
-    # tags carry no vector math — identical rows either way
-    assert loaded.tags(["cat", "fish"], 0.1, 10) == hot.tags(
-        ["cat", "fish"], 0.1, 10
-    )
+    assert _mode_rows(loaded, qvec, seg_rows) == _mode_rows(hot, qvec, seg_rows)
 
 
 def test_sharded_float32_from_paths(engine, tmp_path):
-    """save_shards(dtype="float32") → from_paths: the disk-booted
-    float32 sharded posture merges to the float64 single index's rows
-    at the same 1e-6 tolerance."""
+    """save_shards → from_paths keeps each shard's float32 matrices,
+    and the disk-booted sharded posture merges to exactly the rows of
+    the same shards held in memory."""
+    import numpy as np
+
     from data_feature_extraction_and_retrieval_pipeline_spark.serving import (
         ShardedHotIndex,
     )
 
     hot = engine.hot()
-    paths = ShardedHotIndex.from_hot(hot, 3).save_shards(
-        str(tmp_path / "shards32"), dtype="float32"
+    live = ShardedHotIndex.from_hot(hot, 3)
+    sharded = ShardedHotIndex.from_paths(
+        live.save_shards(str(tmp_path / "shards32"))
     )
-    sharded = ShardedHotIndex.from_paths(paths)
+    for a, b in zip(sharded.shards, live.shards):
+        assert a.image_mat.dtype == np.float32
+        _assert_bits_equal(a.image_mat, b.image_mat)
+        _assert_bits_equal(a.seg_mat, b.seg_mat)
     qvec, seg_rows = engine._encode_query(
         PAYLOADS[0], "q.png", "hybrid", dim=hot.dim,
         model_loader=lambda: None,
     )
-    _assert_rows_equal(sharded.whole(qvec, 7), hot.whole(qvec, 7), 1e-6)
-    _assert_rows_equal(
-        sharded.hybrid(qvec, seg_rows, 5),
-        hot.hybrid(qvec, seg_rows, 5), 1e-6,
+    assert sharded.whole(qvec, 7) == live.whole(qvec, 7)
+    assert sharded.hybrid(qvec, seg_rows, 5) == live.hybrid(qvec, seg_rows, 5)
+    _assert_rows_equal(sharded.whole(qvec, 7), hot.whole(qvec, 7), 1e-12)
+
+
+# -- float32 screen, float64 decision --------------------------------------
+
+
+def _near_tie_index(seed):
+    """A float32 index built to defeat a loose screen: every row is one
+    of a few base vectors nudged by one float32 step on one component,
+    so exact scores sit within 1e-7 of each other around every cut, and
+    a fifth of the rows are exact duplicates under other ids. Values
+    are fixed-point (rows k·2⁻²⁴ with |k| < 2¹⁹, queries m·2⁻²⁹ with
+    |m| < 2²⁹, 32 dims), so every float64 dot is exact in any summation
+    order and the brute force below is the float64 truth; most queries
+    are not float32-representable, so the query's rounding matters as
+    well as the screen's own."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    dim, n = 32, 1500
+    base = rng.integers(-(2**19) + 8, 2**19 - 8, (6, dim))
+    ints = base[rng.integers(0, len(base), n)]
+    ints[np.arange(n), rng.integers(0, dim, n)] += rng.integers(-3, 4, n)
+    dup = rng.random(n) < 0.2
+    ints[dup] = ints[rng.integers(0, n, int(dup.sum()))]
+    ids = rng.permutation(n * 3)[:n].astype(np.int64)
+    mat = (ints * 2.0**-24).astype(np.float32)
+    owner = rng.integers(0, n, 3000)  # some images get no segments
+    seg_ints = ints[owner].copy()
+    seg_ints[np.arange(len(owner)), rng.integers(0, dim, len(owner))] += (
+        rng.integers(-3, 4, len(owner))
     )
+    seg_mat = (seg_ints * 2.0**-24).astype(np.float32)
+    hot = HotSearchIndex(ids, mat, ids[owner], seg_mat, None)
+
+    def qvec(bits=29):
+        return (rng.integers(-(2**bits), 2**bits, dim) * 2.0**-bits).tolist()
+
+    # the 24-bit query is float32-exact: only the screen's own rounding
+    queries = [qvec(), qvec(), qvec(24)]
+    seg_queries = [[(j, qvec()) for j in range(q)] for q in (1, 3)]
+    return hot, ids, mat, ids[owner], seg_mat, queries, seg_queries
+
+
+def _ref_whole(ids, mat, q, k, allowed=None):
+    """float64 brute force: score every row, (score DESC, id ASC)."""
+    import numpy as np
+
+    scores = mat.astype(np.float64) @ np.asarray(q) + 1.0
+    keep = np.ones(len(ids), bool) if allowed is None else np.isin(
+        ids, list(allowed)
+    )
+    rows = sorted(
+        zip(ids[keep].tolist(), scores[keep].tolist()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    return [{"image_id": i, "score": s} for i, s in rows[:k]]
+
+
+def _ref_segment_avgs(seg_ids, seg_mat, seg_rows, images):
+    """image id → (avg, max) of the per-query-segment maxima, the avg
+    summed left to right."""
+    import numpy as np
+
+    qmat = np.asarray([v for _, v in seg_rows])
+    out = {}
+    for g in sorted(set(images) & set(seg_ids.tolist())):
+        maxima = (seg_mat[seg_ids == g].astype(np.float64) @ qmat.T).max(axis=0)
+        total = 0.0
+        for x in maxima.tolist():
+            total += x
+        out[g] = (total / len(maxima), float(maxima.max()))
+    return out
+
+
+def _ref_hybrid(ids, mat, seg_ids, seg_mat, q, seg_rows, top_k, allowed=None):
+    pool = _ref_whole(ids, mat, q, max(top_k * 20, 100), allowed)
+    seg = _ref_segment_avgs(
+        seg_ids, seg_mat, seg_rows, [r["image_id"] for r in pool]
+    )
+    rows = []
+    for r in pool:
+        w, s = r["score"], seg.get(r["image_id"], (0.0, 0.0))[0]
+        rows.append((r["image_id"], w, s, 0.4 * w + 0.6 * s))
+    rows.sort(key=lambda r: (-round_half_up(r[3], 6), r[0]))
+    return [
+        {"image_id": g, "whole_score": w, "segment_score": s,
+         "hybrid_score": h}
+        for g, w, s, h in rows[:top_k]
+    ]
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_float32_screen_exact_on_near_ties(seed):
+    """The float32 screen never drops a true top-k row or a tie at the
+    cut: whole, hybrid and segment rows equal a float64 brute force
+    exactly (ids and scores) on near-tied and duplicated rows, with and
+    without ``allowed`` subsets, at k = 200 (the hybrid pool), around
+    it, and at k ≥ n; and the float32 index answers exactly like the
+    same matrices held in float64."""
+    import numpy as np
+
+    hot, ids, mat, seg_ids, seg_mat, queries, seg_queries = _near_tie_index(
+        seed
+    )
+    assert hot.image_mat.dtype == np.float32
+    wide = HotSearchIndex(
+        ids, mat.astype(np.float64), seg_ids, seg_mat.astype(np.float64), None
+    )
+    rng = np.random.default_rng(seed + 100)
+    subsets = [
+        None,
+        set(rng.choice(ids, len(ids) // 2, replace=False).tolist()),
+        set(rng.choice(ids, 150, replace=False).tolist()) | {-1, 10**9},
+    ]
+    n = len(ids)
+    for q in queries:
+        for allowed in subsets:
+            for k in (1, 7, 60, 199, 200, 201, n - 1, n, n + 5):
+                got = hot.whole(q, k, allowed=allowed)
+                assert got == _ref_whole(ids, mat, q, k, allowed), (k, allowed)
+                assert got == wide.whole(q, k, allowed=allowed)
+            for seg_rows in seg_queries:
+                for top_k in (3, 10, 40):
+                    got = hot.hybrid(q, seg_rows, top_k, allowed=allowed)
+                    assert got == _ref_hybrid(
+                        ids, mat, seg_ids, seg_mat, q, seg_rows, top_k,
+                        allowed,
+                    ), (top_k, allowed)
+                    assert got == wide.hybrid(
+                        q, seg_rows, top_k, allowed=allowed
+                    )
+    for seg_rows in seg_queries:
+        for allowed in subsets:
+            for cap in (None, 1, 30, 200):
+                got = hot.segment(seg_rows, 25, candidate_cap=cap,
+                                  allowed=allowed)
+                groups = sorted(set(seg_ids.tolist()))
+                if allowed is not None:
+                    groups = [g for g in groups if g in allowed]
+                groups = groups[:cap] if cap is not None else groups
+                ref = sorted(
+                    _ref_segment_avgs(seg_ids, seg_mat, seg_rows, groups).items(),
+                    key=lambda r: (-round_half_up(r[1][0], 6), r[0]),
+                )[:25]
+                assert got == [
+                    {"image_id": g, "avg_similarity": a,
+                     "max_segment_similarity": m}
+                    for g, (a, m) in ref
+                ], (cap, allowed)
+                assert got == wide.segment(
+                    seg_rows, 25, candidate_cap=cap, allowed=allowed
+                )
+
+
+def test_float32_screen_keeps_no_float64_copy(engine):
+    """A float32 source stays float32 after the build, its largest row
+    norm is computed once there, and answering a whole query allocates
+    no matrix-sized float64 temporary."""
+    import tracemalloc
+
+    import numpy as np
+
+    hot = engine.hot()
+    mat = hot.image_mat
+    assert mat.dtype == np.float32 and hot.seg_mat.dtype == np.float32
+    assert hot.image_maxnorm == pytest.approx(
+        float(np.linalg.norm(mat.astype(np.float64), axis=1).max()), rel=1e-12
+    )
+    qvec = [float(x) for x in mat[3].astype(np.float64) * 0.5]
+    hot.whole(qvec, 5)  # warm any lazy numpy/BLAS set-up
+    tracemalloc.start()
+    try:
+        rows = hot.whole(qvec, 5)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(rows) == 5
+    assert peak < mat.size * 8
 
 
 # -- columnar artifact (Arrow build, flat tag arrays) ----------------------
@@ -665,9 +828,19 @@ _TAGS_SCHEMA = (
 )
 
 
+def _source_dtype(df, vec_col):
+    """numpy dtype of an ``array<float|double>`` column's elements."""
+    import numpy as np
+    from pyspark.sql.types import FloatType
+
+    element = df.schema[vec_col].dataType.elementType
+    return np.float32 if isinstance(element, FloatType) else np.float64
+
+
 def _row_build(eng):
-    """The artifact as a row-wise ``collect()`` builds it — the
-    reference the columnar build must reproduce bit for bit."""
+    """The artifact as a row-wise ``collect()`` builds it, matrices in
+    the source column's dtype — the reference the columnar build must
+    reproduce bit for bit."""
     import numpy as np
 
     col = eng.image_col
@@ -681,9 +854,14 @@ def _row_build(eng):
     ]
     return (
         np.asarray([r[0] for r in img]),
-        np.asarray([r[1] for r in img], dtype=np.float64),
+        np.asarray(
+            [r[1] for r in img], dtype=_source_dtype(eng.images, "embedding")
+        ),
         seg_ids[order],
-        np.asarray([r[1] for r in seg], dtype=np.float64)[order],
+        np.asarray(
+            [r[1] for r in seg],
+            dtype=_source_dtype(eng.segments, "clip_features"),
+        )[order],
         tags,
     )
 
@@ -745,8 +923,9 @@ def shuffled_engine(spark):
 
 @pytest.mark.parametrize("which", ["sf", "shuffled"])
 def test_from_engine_bit_equal_to_row_collect(engine, shuffled_engine, which):
-    """The Arrow build's ids, float64 matrices, segment order and tag
-    rows equal a row-wise collect of the same tables, bit for bit."""
+    """The Arrow build's ids, matrices (in the source dtype — float32
+    here, never widened), segment order and tag rows equal a row-wise
+    collect of the same tables, bit for bit."""
     eng = engine if which == "sf" else shuffled_engine
     img_ids, img_mat, seg_ids, seg_mat, tags = _row_build(eng)
     hot = HotSearchIndex.from_engine(eng)
