@@ -14,10 +14,19 @@ build costs land in bench_detail.json next to this script.
 
 Each query is timed end-to-end (plan + execute + fetch) the same way
 the driver's correctness gate consumes it (collect of a small result).
+
+The measurement protocol lives here once and tools/bench_x10.py,
+tools/time_oracle.py and tools/profile_queries.py import it: the
+session and resident warm-up (:func:`prepare`), the per-query
+measurement (:func:`measure_query`), the job-floor probe
+(:func:`measure_floor`), the run-conditions guard (:func:`noise_guard`
+over :func:`trailing_artifacts`) and the DuckDB oracle timer
+(:func:`oracle_connection`, :func:`oracle_seconds`).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import statistics
@@ -193,60 +202,329 @@ def trailing_artifacts(pattern: str, exclude: str | None = None, **config) -> li
     return out
 
 
-def main() -> None:
-    from data_feature_extraction_and_retrieval_pipeline_spark import api, caching, indexes, queries as Q
+def failure(stage: str, query: str | None, exc: Exception) -> dict:
+    """One probe failure (job counts, oracle set-up and timings) as
+    listed in bench_detail.json, echoed to stderr."""
+    print(f"bench: {stage} {query}: {exc!r}", file=sys.stderr)
+    return {"stage": stage, "query": query, "error": type(exc).__name__}
+
+
+def prepare(app_name: str, mult: int | None = None):
+    """The bench session and its resident warm-up; returns
+    ``(spark, sf_dir, tables)`` for the sf0.1 fixture at
+    ``$SPARK_GRAFT_SF_DIR`` (``mult=None``) or the x``mult`` synth
+    fixture (built on first use by ``scaling_report.ensure_fixture``).
+
+    The pre-AQE shuffle width is sized to the local data volume: 4 at
+    sf0.1 (measured: 4 beats 8 and 2 across the headline set — reduce
+    inputs are 10²-10⁵ rows, so fewer, bigger reduce tasks win), 16 at
+    x10 (10³-10⁶ rows). AQE is off: at sf0.1 on one machine its
+    per-stage replanning added more scheduler latency than its runtime
+    coalescing saved (17.9 s vs 22.2 s A/B on the full headline set),
+    and plans stay stable run to run; a cluster run at real scale
+    re-enables it (session.py default).
+
+    Steady-state serving model (the reference keeps models and indices
+    resident and queries arrive hot): base tables cached and counted
+    once, the tiny query-vector and centroid artifacts pre-collected,
+    write-time index artifacts (indexes.py) kept resident, and plans
+    prepared once and re-executed per run with fresh shuffles and
+    broadcasts (queries.py) — so per-query times measure the query,
+    not startup, base-table scans or index builds a cluster does once
+    at ingest. Last, a Python-UDF query forks and warms the reusable
+    Python workers.
+    """
+    from data_feature_extraction_and_retrieval_pipeline_spark import (
+        indexes,
+        queries as Q,
+        schemas,
+    )
     from data_feature_extraction_and_retrieval_pipeline_spark.session import get_spark
     from data_feature_extraction_and_retrieval_pipeline_spark.sources import readers
 
     spark = get_spark(
-        app_name="dferp-spark-bench",
+        app_name=app_name,
         cpus=int(CPUS),
-        # pre-AQE bound sized to the local data volume (measured: 4 beats
-        # 8 and 2 across the headline set — reduce inputs here are 10²-10⁵
-        # rows, so fewer/bigger reduce tasks win); AQE coalesces further
-        # at runtime and a real cluster overrides this anyway
-        shuffle_partitions=4,
+        shuffle_partitions=4 if mult is None else 16,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            # At sf0.1 on one machine, AQE's per-stage replanning adds
-            # more scheduler latency than its runtime coalescing saves
-            # (measured 17.9 s vs 22.2 s A/B on the full headline set);
-            # a cluster run at real scale re-enables it (session.py
-            # default).
             "spark.sql.adaptive.enabled": "false",
-            # single machine — no data locality to wait for
             "spark.locality.wait": "0ms",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if mult is None:
+        sf_dir, tables = SF_DIR, list(schemas.TABLES)
+        workers = ("ml_multimodal_meta", "agg_value_counts")
+    else:
+        sys.path.insert(0, str(REPO / "tools"))
+        import scale_check
+        import scaling_report
 
-    qs = Q.queries()
-    # Steady-state serving model (the reference keeps models/indices
-    # resident and queries arrive hot): cache the ten immutable base
-    # tables once, materialize them, pre-collect the tiny query
-    # vector / centroid artifacts, and keep the write-time index
-    # artifacts (IVF assignments, LSH buckets, MinHash band signatures
-    # — indexes.py) resident, so per-query times measure the query,
-    # not session startup, repeated base-table scans, or index
-    # rebuilds a cluster does once at ingest.
-    # Prepared plans: build each query's DataFrame once, re-execute per
-    # run (fresh shuffles/broadcasts every time — queries.py).
+        sf_dir = scaling_report.ensure_fixture(spark, mult)
+        tables = sorted(scale_check.synth_tables(sf_dir))
+        workers = ("dedup_exact",)
+
     Q.enable_plan_cache(True)
     readers.enable_table_cache(True)
     indexes.enable_index_cache(True)
-    for name in readers.schemas.TABLES:
-        readers.load_table(spark, SF_DIR, name).count()
-    Q._query_vector(spark, SF_DIR, 0)
-    Q._query_vector(spark, SF_DIR, 42)
-    Q._leading_vectors(spark, SF_DIR, 16)
-    # fork + warm the reusable Python workers so the first pandas-UDF
-    # query doesn't pay interpreter spin-up
-    qs["ml_multimodal_meta"](spark, SF_DIR).collect()
-    qs["agg_value_counts"](spark, SF_DIR).collect()
+    for name in tables:
+        readers.load_table(spark, sf_dir, name).count()
+    Q._query_vector(spark, sf_dir, 0)
+    Q._query_vector(spark, sf_dir, 42)
+    Q._leading_vectors(spark, sf_dir, 16)
+    qs = Q.queries()
+    for name in workers:
+        qs[name](spark, sf_dir).collect()
+    return spark, sf_dir, tables
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _group_counts(sc, group: str) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) the status tracker holds for job group
+    ``group``. A stage counts once, and only if it ran a task: a stage
+    whose shuffle output a later job reuses is skipped there."""
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    ran: dict[int, int] = {}
+    for j in jobs:
+        info = st.getJobInfo(j)
+        for sid in info.stageIds if info is not None else ():
+            si = st.getStageInfo(sid)
+            if si is not None and si.numTasks > 0 and si.numCompletedTasks > 0:
+                ran[sid] = si.numTasks
+    return len(jobs), len(ran), sum(ran.values())
+
+
+def measure_query(spark, fn, sf_dir: str, name: str):
+    """One query under the bench protocol; returns ``(record, df)``.
+
+    An untimed warm run, then the min of three CONSECUTIVE timed runs —
+    the protocol :func:`oracle_seconds` applies to the DuckDB
+    denominator, so the ratio compares like with like. The JIT tiers a
+    query's generated code up only after a few executions (q1's agg
+    loop: 390 ms on execution 2 → 100 ms steady-state), consecutive
+    runs are how a resident server executes a hot query, and the min
+    damps shared-host noise (±30% run-to-run).
+
+    ``record`` holds ``seconds`` (the min), ``jobs`` (scheduled by the
+    last timed run — a query with 4 jobs pays ~4 job floors of pure
+    overhead; None if the status tracker failed), ``rows_out``,
+    ``failures`` (:func:`failure` dicts) and ``layers``: the warm run
+    split into construct (the registry call — a ``select("*")`` on the
+    prepared plan unless this is the query's first call), analyze,
+    optimize, physical plan and execute+fetch seconds, with its jobs,
+    stages and tasks. ``df`` is the warm run's DataFrame.
+
+    ``caching.release(name)`` follows every run: intra-query persists
+    are scoped to one execution, so no run reads a prior run's blocks
+    and the session accumulates no dead cache blocks. It is scoped to
+    the query because each unpersist+re-persist recompiles that frame's
+    InMemoryRelation; a full-ledger release costs seconds per call
+    once the deep curation-chain frames are in the ledger.
+    """
+    from data_feature_extraction_and_retrieval_pipeline_spark import caching
+
+    sc = spark.sparkContext
+    failures: list[dict] = []
+    with _job_group(sc, f"bench-warm:{name}"):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        qe = df._jdf.queryExecution()
+        qe.analyzed()
+        t2 = time.perf_counter()
+        qe.optimizedPlan()
+        t3 = time.perf_counter()
+        qe.executedPlan()
+        t4 = time.perf_counter()
+        rows_out = len(df.collect())
+        t5 = time.perf_counter()
+    layers: dict = {
+        "construct_s": round(t1 - t0, 4),
+        "analyze_s": round(t2 - t1, 4),
+        "optimize_s": round(t3 - t2, 4),
+        "plan_s": round(t4 - t3, 4),
+        "execute_fetch_s": round(t5 - t4, 4),
+    }
+    try:
+        layers["jobs"], layers["stages"], layers["tasks"] = _group_counts(
+            sc, f"bench-warm:{name}"
+        )
+    except Exception as e:
+        failures.append(failure("stage_count", name, e))
+    caching.release(name)
+
+    best = None
+    for i in range(3):
+        with _job_group(sc, f"bench{i}:{name}"):
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).collect()
+            dt = round(time.perf_counter() - t0, 3)
+        best = dt if best is None else min(best, dt)
+        caching.release(name)
+    jobs = None
+    try:
+        jobs = len(sc.statusTracker().getJobIdsForGroup(f"bench2:{name}"))
+    except Exception as e:
+        failures.append(failure("job_count", name, e))
+    return {
+        "seconds": best,
+        "jobs": jobs,
+        "rows_out": rows_out,
+        "layers": layers,
+        "failures": failures,
+    }, df
+
+
+def measure_floor(spark) -> float:
+    """The per-job fixed floor: min of 3 runs of a 32-task no-op job
+    through the same session (scheduler + py4j + task launch, no plan
+    work). The sub-150 ms bench tail IS this constant (SCALING.md
+    "fixed-overhead floor")."""
+    best = None
+    for _ in range(3):
+        t0 = time.perf_counter()
+        spark.range(0, 32 * 1000, 1, 32).count()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return best
+
+
+def noise_guard(
+    history: list[dict],
+    floor: float,
+    reprobe,
+    oracle_total: float,
+    timings: dict[str, float],
+) -> dict:
+    """Run-conditions guard over three signals; trips if ANY fires.
+
+    1. The Spark job ``floor`` vs the trailing median of ``history``'s
+       ``job_floor_s`` (scheduler contention). Contention is often
+       bursty, so a floor above 1.5x the median is re-measured once
+       with ``reprobe()`` and the lower value kept before it flags.
+    2. ``oracle_total`` vs the trailing median of the clean (not
+       ``noisy_run``) artifacts' oracle totals: identical SQL over
+       identical data can only drift with the box, and a slow
+       denominator flatters every ratio. r13: the floor probe alone
+       missed a contended r12 x10 sweep whose DuckDB denominator ran
+       ~3x slow under the trip wire.
+    3. The median per-query wall drift of ``timings`` vs the most
+       recent artifact with per-query walls: a plan change moves a few
+       queries, contention moves the median of all of them.
+
+    ``history`` is :func:`trailing_artifacts` at this run's config,
+    oldest first; with none, the guard is inert. Returns the artifact
+    fields ``job_floor_s`` (unrounded, after any re-probe),
+    ``floor_median_trailing``, ``oracle_median_trailing``,
+    ``wall_drift_median``, ``noisy_run`` and ``noisy_signals``, so the
+    regression-vs-noise call is mechanical from the artifact.
+    """
+    floors = [
+        float(d["job_floor_s"])
+        for d in history
+        if isinstance(d.get("job_floor_s"), (int, float))
+    ]
+    oracles = [
+        float(d["oracle_total"])
+        for d in history
+        if isinstance(d.get("oracle_total"), (int, float))
+        and not d.get("noisy_run")
+    ]
+    prev = next(
+        (
+            d["queries"]
+            for d in reversed(history)
+            if isinstance(d.get("queries"), dict) and d["queries"]
+        ),
+        {},
+    )
+    floor_median = statistics.median(floors) if floors else None
+    noisy_floor = False
+    if floor_median is not None and floor > 1.5 * floor_median:
+        print(
+            f"bench: measured job floor {floor:.4f}s > 1.5x trailing "
+            f"median {floor_median:.4f}s — re-measuring",
+            file=sys.stderr,
+        )
+        floor = min(floor, reprobe())
+        noisy_floor = floor > 1.5 * floor_median
+    oracle_median = statistics.median(oracles) if oracles else None
+    noisy_oracle = (
+        oracle_median is not None and oracle_total > 1.5 * oracle_median
+    )
+    drifts = [
+        timings[n] / prev[n] for n in timings if n in prev and prev[n] > 0
+    ]
+    wall_drift = round(statistics.median(drifts), 3) if drifts else None
+    noisy_wall = wall_drift is not None and wall_drift > 1.5
+    noisy = noisy_floor or noisy_oracle or noisy_wall
+    if noisy:
+        print(
+            f"bench: NOISY RUN (floor={noisy_floor} oracle={noisy_oracle} "
+            f"wall={noisy_wall}) — do not read round-over-round deltas "
+            "off this artifact",
+            file=sys.stderr,
+        )
+    return {
+        "job_floor_s": floor,
+        "floor_median_trailing": floor_median,
+        "oracle_median_trailing": oracle_median,
+        "wall_drift_median": wall_drift,
+        "noisy_run": noisy,
+        "noisy_signals": {
+            "floor": noisy_floor,
+            "oracle": noisy_oracle,
+            "wall": noisy_wall,
+        },
+    }
+
+
+def oracle_connection(sf_dir: str, tables):
+    """A DuckDB connection with one view per table present under
+    ``sf_dir`` (a Spark-written table is a directory of part files)."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in tables:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            src = f"{p}/*.parquet" if os.path.isdir(p) else p
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    return con
+
+
+def oracle_seconds(con, sql: str, reps: int = 2) -> float:
+    """DuckDB wall for ``sql``: one warm run, then the min of ``reps``
+    consecutive timed runs (fetching every row)."""
+    con.execute(sql).fetchall()
+    best = None
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        con.execute(sql).fetchall()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return best
+
+
+def main() -> None:
+    from data_feature_extraction_and_retrieval_pipeline_spark import api, caching, indexes, queries as Q
+
+    spark, _, tables = prepare("dferp-spark-bench")
+    qs = Q.queries()
 
     # One untimed pass compiles every plan (Catalyst analysis + codegen
     # for the wide hash/vote projections is a one-time cost per query
-    # shape), then the timed pass measures steady-state execution — the
+    # shape), then the measured pass times steady-state execution — the
     # number that scales with data volume and the one comparable to the
     # reference's resident serving process. cold_total reports the
     # first-pass wall so the compile cost stays visible. The cold pass
@@ -261,65 +539,20 @@ def main() -> None:
     caching.release()
     cold_total = round(time.perf_counter() - t0, 3)
 
-    # Per query: one untimed warm run, then min of three CONSECUTIVE
-    # timed runs — the same protocol tools/time_oracle.py applies to
-    # the DuckDB denominator (warm + min of consecutive repeats), so
-    # the ratio compares like with like. Measured rationale: the JIT
-    # tiers a query's generated code up only after a few executions
-    # (q1's agg loop: 390 ms on execution 2 → 100 ms steady-state),
-    # and consecutive runs are how a resident serving process — the
-    # model this bench documents — actually executes a hot query.
-    # Shared-host noise (±30% run-to-run) is damped by the min.
     timings: dict[str, float] = {}
-    # Structural job count per warm execution (statusTracker over a
-    # per-query job group on the last timed run): the single job_floor
-    # under-adjusts multi-job queries — a query that schedules 4 jobs
-    # pays ~4 scheduling slices of pure overhead — so the triage needs
-    # the count next to the time (SCALING.md "floor" section).
     jobs_per_query: dict[str, int] = {}
+    query_layers: dict[str, dict] = {}
     # Probes the bench survives without (job counts, oracle timings):
     # each failure is listed in bench_detail.json by stage, query and
     # exception type, so a short map is never mistaken for a full one.
     failures: list[dict] = []
-
-    def _failed(stage: str, query: str | None, exc: Exception) -> None:
-        failures.append(
-            {"stage": stage, "query": query, "error": type(exc).__name__}
-        )
-        print(f"bench: {stage} {query}: {exc!r}", file=sys.stderr)
-
-    sc = spark.sparkContext
     for name in HEADLINE:
-        fn = qs[name]
-        fn(spark, SF_DIR).collect()
-        caching.release(name)
-        for i in range(3):
-            if i == 2:
-                sc.setJobGroup(f"bench:{name}", "warm job-count probe")
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).collect()
-            dt = round(time.perf_counter() - t0, 3)
-            if i == 2:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                try:
-                    jobs_per_query[name] = len(
-                        sc.statusTracker().getJobIdsForGroup(
-                            f"bench:{name}"
-                        )
-                    )
-                except Exception as e:
-                    _failed("job_count", name, e)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-            # intra-query persists (minhash shingles, hybrid phase-1)
-            # are scoped to one execution — drop THIS query's frames,
-            # untimed, so no run reads a prior run's blocks and the
-            # session doesn't accumulate dead cache blocks. Scoped to
-            # the query (caching.scope) because each unpersist+
-            # re-persist recompiles that frame's InMemoryRelation —
-            # a full-ledger release here costs seconds per call once
-            # the deep curation-chain frames are in the ledger.
-            caching.release(name)
+        rec, _ = measure_query(spark, qs[name], SF_DIR, name)
+        timings[name] = rec["seconds"]
+        if rec["jobs"] is not None:
+            jobs_per_query[name] = rec["jobs"]
+        query_layers[name] = rec["layers"]
+        failures.extend(rec["failures"])
 
     sf = None
     tail = Path(SF_DIR.rstrip("/")).name
@@ -330,130 +563,46 @@ def main() -> None:
             pass
 
     # The grading denominator, emitted alongside: DuckDB-oracle wall
-    # time for every oracled headline query on the same parquet (min
-    # of 2 after a warm pass — same protocol as the Spark timings), so
+    # time for every oracled headline query on the same parquet, so
     # each round's JSON carries its own bench-vs-oracle ratio.
     oracle_timings: dict[str, float] = {}
     try:
-        import duckdb
-
         oracles = Q.oracle_sql()
-        con = duckdb.connect()
-        for tname in readers.schemas.TABLES:
-            p = os.path.join(SF_DIR, f"{tname}.parquet")
-            if os.path.exists(p):
-                con.execute(
-                    f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')"
-                )
+        con = oracle_connection(SF_DIR, tables)
     except Exception as e:
-        _failed("oracle_setup", None, e)
+        failures.append(failure("oracle_setup", None, e))
         con = None
     for name in HEADLINE if con is not None else ():
         sql = oracles.get(name)
         if sql is None:
             continue
         try:
-            con.execute(sql).fetchall()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            oracle_timings[name] = round(best, 4)
+            oracle_timings[name] = round(oracle_seconds(con, sql), 4)
         except Exception as e:
-            _failed("oracle", name, e)
+            failures.append(failure("oracle", name, e))
 
     total = round(sum(timings.values()), 3)
     spark_oracled = round(
         sum(v for k, v in timings.items() if k in oracle_timings), 3
     )
-    # Measured per-job fixed floor: a 32-task no-op job through the
-    # same session (scheduler + py4j + task launch, no plan work).
-    # The sub-150 ms bench tail IS this constant (SCALING.md "fixed-
-    # overhead floor"), so the per-query 2x-of-oracle triage subtracts
-    # it: floor_adj_ratio = max(spark - floor, 0) / oracle. A ratio
-    # that is high even floor-adjusted is a real plan question; a raw
-    # ratio that collapses to ~0 after adjustment is job overhead on a
-    # tiny oracle denominator, not a defect.
-    def _measure_floor() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 32 * 1000, 1, 32).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    floor = _measure_floor()
-    # Run-conditions guard (round-11 verdict: an 18% headline swing
-    # was pure shared-box contention and had to be diagnosed by hand).
-    # Compare the measured floor against the trailing-round median; a
-    # floor >1.5x the median marks the run noisy — re-measure once
-    # (contention is often bursty), then record the flag + ratio so
-    # the regression-vs-noise call is mechanical from the artifact.
-    # r13 (VERDICT r12): the floor probe alone missed a contended r12
-    # x10 sweep whose DuckDB denominator ran ~3x slow under the trip
-    # wire — so this guard (like tools/bench_x10.py's) now watches
-    # three signals and trips on ANY: the Spark job floor, the oracle
-    # denominator total, and the median per-query Spark wall drift vs
-    # the most recent committed artifact — history taken only from
-    # artifacts at this run's (sf, cpus).
-    history = trailing_artifacts("BENCH_r*.json", sf=sf, cpus=int(CPUS))
-    trailing = [
-        float(d["job_floor_s"])
-        for d in history
-        if isinstance(d.get("job_floor_s"), (int, float))
-    ]
-    trailing_oracle = [
-        float(d["oracle_total"])
-        for d in history
-        if isinstance(d.get("oracle_total"), (int, float))
-        and not d.get("noisy_run")
-    ]
-    prev_queries = next(
-        (
-            d["queries"]
-            for d in reversed(history)
-            if isinstance(d.get("queries"), dict) and d["queries"]
-        ),
-        None,
+    oracle_total = round(sum(oracle_timings.values()), 3)
+    # Run-conditions guard (round-11 verdict: an 18% headline swing was
+    # pure shared-box contention and had to be diagnosed by hand),
+    # against history taken only from artifacts at this run's
+    # (sf, cpus).
+    guard = noise_guard(
+        trailing_artifacts("BENCH_r*.json", sf=sf, cpus=int(CPUS)),
+        measure_floor(spark),
+        lambda: measure_floor(spark),
+        oracle_total,
+        timings,
     )
-    floor_median = statistics.median(trailing) if trailing else None
-    noisy_floor = False
-    if floor_median is not None and floor > 1.5 * floor_median:
-        print(
-            f"bench: measured job floor {floor:.4f}s > 1.5x trailing "
-            f"median {floor_median:.4f}s — re-measuring",
-            file=sys.stderr,
-        )
-        floor = min(floor, _measure_floor())
-        noisy_floor = floor > 1.5 * floor_median
-    oracle_total_now = round(sum(oracle_timings.values()), 3)
-    oracle_median_trailing = (
-        statistics.median(trailing_oracle) if trailing_oracle else None
-    )
-    noisy_oracle = (
-        oracle_median_trailing is not None
-        and oracle_total_now > 1.5 * oracle_median_trailing
-    )
-    wall_drift = None
-    if prev_queries:
-        drifts = [
-            timings[n] / prev_queries[n]
-            for n in timings
-            if n in prev_queries and prev_queries[n] > 0
-        ]
-        if drifts:
-            wall_drift = round(statistics.median(drifts), 3)
-    noisy_wall = wall_drift is not None and wall_drift > 1.5
-    noisy = noisy_floor or noisy_oracle or noisy_wall
-    if noisy:
-        print(
-            f"bench: NOISY RUN (floor={noisy_floor} "
-            f"oracle={noisy_oracle} wall={noisy_wall})",
-            file=sys.stderr,
-        )
+    floor = guard["job_floor_s"]
+    # The per-query 2x-of-oracle triage subtracts the job floor:
+    # floor_adj_ratio = max(spark - floor, 0) / oracle. A ratio that is
+    # high even floor-adjusted is a real plan question; a raw ratio
+    # that collapses to ~0 after adjustment is job overhead on a tiny
+    # oracle denominator, not a defect.
     floor_adj = {
         name: (
             round(max(timings[name] - floor, 0.0) / o, 2) if o > 0 else None
@@ -473,7 +622,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "cold_total": cold_total,
-        "oracle_total": round(sum(oracle_timings.values()), 3),
+        "oracle_total": oracle_total,
         "oracle_n": len(oracle_timings),
         "oracle_queries": oracle_timings,
         "spark_oracled_total": spark_oracled,
@@ -481,9 +630,14 @@ def main() -> None:
         # against this: a query at 3× with 5 jobs is pure scheduling
         # overhead (5 × job_floor_s), not a plan defect
         "jobs_per_query": jobs_per_query,
-        # probes that raised (job counts, oracle set-up and timings):
-        # a query missing from jobs_per_query or oracle_queries is
-        # listed here with its exception type
+        # the untimed warm run of each query split by layer (construct,
+        # analyze, optimize, physical plan, execute+fetch) with its
+        # jobs, stages and tasks — see measure_query
+        "query_layers": query_layers,
+        # probes that raised (job and stage counts, oracle set-up and
+        # timings): a query missing from jobs_per_query, query_layers'
+        # counts or oracle_queries is listed here with its exception
+        # type
         "failures": failures,
         "resident_index_artifacts": resident,
         # one-time from-scratch build cost of each resident
@@ -496,6 +650,7 @@ def main() -> None:
         # construction — priced explicitly instead of hiding in
         # cold_total)
         "curate_checkpoint_s": dict(sorted(api.CHECKPOINT_SECONDS.items())),
+        **guard,
         "job_floor_s": round(floor, 4),
         "floor_adj_ratio": floor_adj,
         # headline with the per-query fixed floor removed — the
@@ -505,15 +660,6 @@ def main() -> None:
         "floor_adj_headline": round(
             sum(max(t - floor, 0.0) for t in timings.values()), 3
         ),
-        "floor_median_trailing": floor_median,
-        "oracle_median_trailing": oracle_median_trailing,
-        "wall_drift_median": wall_drift,
-        "noisy_run": noisy,
-        "noisy_signals": {
-            "floor": noisy_floor,
-            "oracle": noisy_oracle,
-            "wall": noisy_wall,
-        },
         # core count the artifact was measured at (r14 hygiene: the
         # committed detail file must not be confusable with the
         # driver's lower-core scaling run)
@@ -534,7 +680,7 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "cold_total": cold_total,
-        "oracle_total": detail["oracle_total"],
+        "oracle_total": oracle_total,
         "oracle_n": len(oracle_timings),
         "spark_oracled_total": spark_oracled,
         "index_build_total": round(sum(indexes.BUILD_SECONDS.values()), 3),
@@ -543,7 +689,7 @@ def main() -> None:
         ),
         "job_floor_s": round(floor, 4),
         "floor_adj_headline": detail["floor_adj_headline"],
-        "noisy_run": noisy,
+        "noisy_run": guard["noisy_run"],
         "sf": sf,
         # contract shape preserved (a dict of per-query seconds) but
         # bounded: only the 10 slowest — the full map is in the detail

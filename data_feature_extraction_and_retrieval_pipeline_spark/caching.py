@@ -1,8 +1,8 @@
 """Tracked intra-query persists.
 
 Operators persist an intermediate when it feeds multiple consumers in
-the same plan (the MinHash shingle frame, the hybrid-search phase-1
-pool). Those caches are scoped to ONE query execution — but a
+the same plan (the MinHash shingle frame, the label-propagation edge
+list). Those caches are scoped to ONE query execution — but a
 DataFrame is lazy, so the operator that created the cache cannot know
 when its consumer has materialized. Left alone, a resident session
 (the serving model, or a bench loop) accumulates one cache entry per

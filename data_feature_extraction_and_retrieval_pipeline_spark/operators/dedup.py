@@ -446,50 +446,40 @@ def label_propagation_canonical(
     Deterministic integer mins — identical in any engine, which is
     what makes the DuckDB oracle replay possible.
     """
-    # Both edge directions from ONE pass over the pair frame: a
-    # 2-element Generate instead of fwd ∪ reversed. The union form
-    # embedded the ENTIRE pair-mining subtree once per branch, and
-    # while exchange reuse dedups the shuffles, every post-exchange
-    # operator (the pair-count aggregate, the size joins, the Jaccard
-    # filter) executed TWICE per run — measured 15.1 s → ~10 s on the
-    # x10 cluster-canonical wall (guide §2.4: don't recompute what one
-    # Generate can emit). Same multiset of (src, dst) rows.
-    edges_gen = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-            )
-        ).alias("__e")
-    ).select("__e.src", "__e.dst")
-    # edges feed every round (and each round references the label
-    # frame twice), so an unpersisted lineage doubles per round —
-    # plan-size 2^rounds with the whole pair-mining pipeline
-    # replicated into each copy. Persisting the edge list and each
-    # round's (tiny, node-count-sized) label frame keeps the plan
-    # linear in rounds; both are tracked for post-query release.
-    edges = caching.persist(edges_gen)
-    lab = caching.persist(
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("__m"))
-        .select(F.col("src").alias("node"), F.least("src", "__m").alias("label"))
+    # Both edge directions plus a self-loop per endpoint from ONE pass
+    # over the pair frame: a 4-element Generate instead of a union.
+    # The union form embedded the ENTIRE pair-mining subtree once per
+    # branch, and while exchange reuse dedups the shuffles, every
+    # post-exchange operator executed TWICE per run — measured 15.1 s →
+    # ~10 s on the x10 cluster-canonical wall (guide §2.4: don't
+    # recompute what one Generate can emit). With the self-loops, each
+    # round is labelᵗ⁺¹(v) = min over edges (v, u) of labelᵗ(u) — the
+    # recurrence above, reading the previous labels ONCE, so the plan
+    # grows linearly in rounds (duplicate self-loops are harmless under
+    # min). The edge list feeds every round, so it is persisted and
+    # tracked for post-query release.
+    edges = caching.persist(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+                    F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+                    F.struct(F.col(id_a).alias("src"), F.col(id_a).alias("dst")),
+                    F.struct(F.col(id_b).alias("src"), F.col(id_b).alias("dst")),
+                )
+            ).alias("__e")
+        ).select("__e.src", "__e.dst")
     )
+    lab = edges.groupBy("src").agg(F.min("dst").alias("label"))
     for _ in range(rounds - 1):
-        nbr = (
-            edges.join(lab, edges["dst"] == lab["node"])
+        lab = (
+            edges.join(lab.withColumnRenamed("src", "dst"), "dst")
             .groupBy("src")
-            .agg(F.min("label").alias("nbr_min"))
+            .agg(F.min("label").alias("label"))
         )
-        lab = caching.persist(
-            lab.join(nbr, lab["node"] == nbr["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-    return lab.select("node", F.col("label").alias("canonical"))
+    return lab.select(
+        F.col("src").alias("node"), F.col("label").alias("canonical")
+    )
 
 
 def benchmark_shingles(

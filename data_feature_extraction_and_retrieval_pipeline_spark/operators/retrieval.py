@@ -24,7 +24,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .. import caching
 from ..functions import vectors as V
 
 
@@ -310,12 +309,6 @@ def hybrid_search(
     phase1 = knn(
         images, query_vec, k=pool, id_col=image_col, vec_col=whole_vec_col
     ).withColumnRenamed("score", "whole_score")
-    # phase1 feeds BOTH the candidate semi-join and the final score
-    # join; persist the ≤ max(20k,100)-row pool so the whole-image
-    # scan + top-k runs once (the reference re-fetches phase-1 docs
-    # from ES by id — same reuse, set-oriented). Tracked so the
-    # harness can drop it after the result materializes (caching.py).
-    phase1 = caching.persist(phase1)
 
     cand_segments = segments.join(
         F.broadcast(phase1.select(image_col)), image_col, "left_semi"

@@ -60,6 +60,20 @@ def test_hybrid_mode(engine, qvec, qsegs):
     assert top["hybrid_score"] == pytest.approx(1.4, abs=1e-5)
 
 
+def test_hybrid_mode_registers_no_cache_entry(engine, qvec, qsegs):
+    """A Spark-tier hybrid request persists nothing: the service path
+    never calls caching.release, so a persisted phase-1 pool would
+    leave one ledger entry (and one cached plan) per request."""
+    from data_feature_extraction_and_retrieval_pipeline_spark import caching
+
+    before = len(caching._LIVE)
+    for _ in range(2):
+        engine.search(
+            "hybrid", query_vec=qvec, query_segments=qsegs, top_k=5
+        ).collect()
+    assert len(caching._LIVE) == before
+
+
 def test_tags_mode_roundtrip(spark):
     tags_df = spark.createDataFrame(
         [(1, [("dome", 0.9)]), (2, [("tree", 0.4)])],

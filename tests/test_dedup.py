@@ -395,7 +395,11 @@ def test_scoped_release_targets_one_query(spark):
 def test_label_propagation_matches_union_find(spark, docs_with_dups):
     """The fixed-round min-label propagation must assign every node the
     true connected-component minimum (ground truth via union-find) —
-    valid because near-dup clusters here have diameter < rounds."""
+    valid because near-dup clusters here have diameter < rounds — at 3
+    and 5 rounds, and each call persists only its edge list (one ledger
+    entry; every round reads the previous labels once, so no label
+    frame needs a persist to keep the plan linear)."""
+    from data_feature_extraction_and_retrieval_pipeline_spark import caching
     from data_feature_extraction_and_retrieval_pipeline_spark.operators.dedup import (
         label_propagation_canonical,
     )
@@ -421,11 +425,12 @@ def test_label_propagation_matches_union_find(spark, docs_with_dups):
         union(a, b)
     truth = {x: find(x) for x in parent}
 
-    got = {
-        r["node"]: r["canonical"]
-        for r in label_propagation_canonical(pairs, rounds=3).collect()
-    }
-    assert got == truth
+    for rounds in (3, 5):
+        before = len(caching._LIVE)
+        lab = label_propagation_canonical(pairs, rounds=rounds)
+        assert len(caching._LIVE) == before + 1
+        got = {r["node"]: r["canonical"] for r in lab.collect()}
+        assert got == truth
 
 
 def test_portable_pq_catalyst_encode_matches_python(spark):

@@ -11,10 +11,9 @@ tools/scale_check.py) at 10× the sf0.1 rows, where real work
 dominates the fixed overhead, and emits per-query Spark seconds,
 DuckDB-oracle seconds, and both raw and floor-adjusted ratios.
 
-Protocol matches bench.py exactly (steady-state serving model: plan/
-table/index caches on, per-query warm pass + min of 3 consecutive
-timed runs for Spark, warm + min of 2 for DuckDB) so the x10 ratios
-read on the same scale as the sf0.1 headline ratios.
+The protocol is bench.py's own (``bench.prepare``,
+``bench.measure_query``, ``bench.noise_guard``, ``bench.oracle_seconds``),
+so the x10 ratios read on the same scale as the sf0.1 headline ratios.
 
 Writes BENCH_x10_r{N}.json at the repo root (full per-query detail —
 this artifact is committed, not driver-parsed) and prints a compact
@@ -26,7 +25,6 @@ Usage: python tools/bench_x10.py [--round N] [--mult 10]
 from __future__ import annotations
 
 import json
-import os
 import statistics
 import sys
 import time
@@ -35,8 +33,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
-
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Queries whose Spark side performs PHYSICAL side effects inside the
 # timed region — parquet/ORC/CSV writes, managed-table saves, or
@@ -63,28 +59,28 @@ WRITE_PRICED = {
 # cost dominates — PySpark's pickle path runs ~3 ns/row-field slower
 # than DuckDB's C-level fetchall, so the ratio prices the Python client
 # constant, not the plan. Classified by measured result cardinality
-# (rows_out >= FETCH_ROWS), with the split evidenced by
-# tools/profile_analysis.py (e.g. ml_segment_portable at x10: 0.06 s
-# to execute + 0.85 s to pickle 272k rows).
+# (rows_out >= FETCH_ROWS); tools/profile_queries.py --mult 10 gives
+# the layer split (e.g. ml_segment_portable at x10: 0.06 s to execute
+# + 0.85 s to pickle 272k rows).
 FETCH_ROWS = 100_000
 
 
 def main() -> int:
-    import duckdb
-
     import scale_check
-    import scaling_report
-    from bench import trailing_artifacts
+    from bench import (
+        CPUS,
+        measure_floor,
+        measure_query,
+        noise_guard,
+        oracle_connection,
+        oracle_seconds,
+        prepare,
+        trailing_artifacts,
+    )
     from data_feature_extraction_and_retrieval_pipeline_spark import (
         caching,
         indexes,
         queries as Q,
-    )
-    from data_feature_extraction_and_retrieval_pipeline_spark.session import (
-        get_spark,
-    )
-    from data_feature_extraction_and_retrieval_pipeline_spark.sources import (
-        readers,
     )
 
     argv = sys.argv[1:]
@@ -105,28 +101,12 @@ def main() -> int:
         elif a.startswith("--queries="):
             names_filter = set(a.split("=", 1)[1].split(","))
 
-    spark = get_spark(
-        app_name="dferp-spark-bench-x10",
-        cpus=int(CPUS),
-        # x10 reduce inputs are 10³-10⁶ rows — more reduce tasks than
-        # the sf0.1 bench's 4, still far under the 32-thread executor;
-        # AQE off for run-to-run plan stability, same as bench.py
-        shuffle_partitions=16,
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.adaptive.enabled": "false",
-            "spark.locality.wait": "0ms",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    sf_dir = scaling_report.ensure_fixture(spark, mult)
-    tables = scale_check.synth_tables(sf_dir)
-    names = scale_check.coverable_queries(tables)
+    spark, sf_dir, tables = prepare("dferp-spark-bench-x10", mult)
+    names = scale_check.coverable_queries(set(tables))
     if names_filter is not None:
         names = [n for n in names if n in names_filter]
     print(
-        f"x{mult} corpus at {sf_dir} (tables: {sorted(tables)}); "
+        f"x{mult} corpus at {sf_dir} (tables: {tables}); "
         f"{len(names)} oracled queries",
         file=sys.stderr,
         flush=True,
@@ -135,37 +115,21 @@ def main() -> int:
     qs = Q.queries()
     oracles = Q.oracle_sql()
 
-    Q.enable_plan_cache(True)
-    readers.enable_table_cache(True)
-    indexes.enable_index_cache(True)
-    for t in sorted(tables):
-        readers.load_table(spark, sf_dir, t).count()
-    # fork + warm the reusable Python workers (same as bench.py)
-    qs["dedup_exact"](spark, sf_dir).collect()
-
     timings: dict[str, float] = {}
     exec_only: dict[str, float] = {}
     rows_out: dict[str, int] = {}
     for name in names:
-        fn = qs[name]
-        df = fn(spark, sf_dir)
-        rows_out[name] = len(df.collect())  # warm: compile + JIT + index build
-        caching.release(name)
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            dt = round(time.perf_counter() - t0, 3)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-            caching.release(name)
-        # Execution-only: re-collect the SAME DataFrame. CAVEAT — this
-        # is NOT "execution minus planning": a local-mode re-collect
-        # SKIPS every shuffle map stage whose outputs are still in the
-        # MapOutputTracker, re-running only the result stage. Catalyst
-        # planning is ~30 ms/query (tools/profile_analysis.py), so
-        # timings - exec_only ≈ the skipped stages' EXECUTION, not
-        # analysis. Read exec_only as "result stage + fetch" — a deep
-        # lower bound; use profile_analysis.py for the real split.
+        rec, df = measure_query(spark, qs[name], sf_dir, name)
+        timings[name] = rec["seconds"]
+        rows_out[name] = rec["rows_out"]
+        # Execution-only: re-collect the warm run's DataFrame. CAVEAT —
+        # this is NOT "execution minus planning": a local-mode
+        # re-collect SKIPS every shuffle map stage whose outputs are
+        # still in the MapOutputTracker, re-running only the result
+        # stage. Catalyst planning is ~30 ms/query, so timings -
+        # exec_only ≈ the skipped stages' EXECUTION, not analysis. Read
+        # exec_only as "result stage + fetch" — a deep lower bound;
+        # tools/profile_queries.py --mult N gives the real layer split.
         for _ in range(2):
             t0 = time.perf_counter()
             df.collect()
@@ -180,136 +144,33 @@ def main() -> int:
             flush=True,
         )
 
-    # same fixed-floor probe as bench.py — the floor is ~constant in
-    # data volume, so at x10 it adjusts far less of each number
-    def _measure_floor() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 32 * 1000, 1, 32).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
+    # the floor is ~constant in data volume, so at x10 it adjusts far
+    # less of each number
+    floor = measure_floor(spark)
+    con = oracle_connection(sf_dir, tables)
+    oracle_timings: dict[str, float] = {}
+    for name in names:
+        oracle_timings[name] = round(oracle_seconds(con, oracles[name]), 4)
+        print(
+            f"duckdb {name}: {oracle_timings[name]:.4f}s",
+            file=sys.stderr,
+            flush=True,
+        )
+    oracle_total = round(sum(oracle_timings.values()), 3)
 
-    floor = _measure_floor()
-    # Run-conditions guard, mirroring bench.py: compare against the
-    # trailing medians of prior committed x10 artifacts; a floor >1.5x
-    # the median marks the run noisy (shared-box contention) — re-probe
-    # once, then record the flag so a noisy sweep can't masquerade as a
-    # plan regression (or a quiet one as an improvement).
-    #
-    # r13 (VERDICT r12 "What's wrong #2"): the floor probe alone missed
-    # a box-contended r12 sweep whose ORACLE denominator ran ~3x slow
-    # while the Spark floor stayed under the trip wire — so the guard
-    # now watches three independent signals, and trips if ANY fires:
-    #   1. Spark job floor vs trailing median (scheduler contention)
-    #   2. DuckDB oracle_total vs trailing artifacts (the denominator —
-    #      identical SQL on identical data can only drift with the box)
-    #   3. median per-query Spark WALL drift vs the most recent
-    #      artifact over shared query names (a plan change moves a few
-    #      queries; contention moves the median of all of them)
-    # The current round's own artifact is excluded from the trailing
-    # set so a re-run never dampens its own detection (ADVICE r12),
-    # and only artifacts at this run's (mult, cpus) count.
+    # Guard history: prior x10 artifacts at this run's (mult, cpus),
+    # excluding the current round's own artifact so a re-run never
+    # dampens its own detection (ADVICE r12).
     history = trailing_artifacts(
         "BENCH_x10_r*.json",
         exclude=f"BENCH_x10_r{rnd:02d}.json",
         mult=mult,
         cpus=int(CPUS),
     )
-    trailing = [  # job_floor_s of prior rounds
-        float(d["job_floor_s"])
-        for d in history
-        if isinstance(d.get("job_floor_s"), (int, float))
-    ]
-    # oracle totals and per-query oracle walls of prior CLEAN
-    # artifacts — a contended oracle total must not poison the
-    # trailing median. The over-2x bin pins each query's denominator
-    # to the median of (trailing clean values + this run), so bin
-    # membership stops churning with one run's DuckDB contention
-    # (VERDICT r13 'What's wrong #3')
-    clean = [
-        d for d in history
-        if isinstance(d.get("oracle_total"), (int, float))
-        and not d.get("noisy_run")
-    ]
-    trailing_oracle = [float(d["oracle_total"]) for d in clean]
-    trailing_oracle_q: dict[str, list[float]] = {}
-    for d in clean:
-        oq = d.get("oracle_queries")
-        if isinstance(oq, dict):
-            for n, val in oq.items():
-                if isinstance(val, (int, float)):
-                    trailing_oracle_q.setdefault(n, []).append(float(val))
-    # per-query walls of the most recent round
-    prev_queries = next(
-        (
-            d["queries"]
-            for d in reversed(history)
-            if isinstance(d.get("queries"), dict) and d["queries"]
-        ),
-        None,
+    guard = noise_guard(
+        history, floor, lambda: measure_floor(spark), oracle_total, timings
     )
-    floor_median = statistics.median(trailing) if trailing else None
-    noisy_floor = False
-    if floor_median is not None and floor > 1.5 * floor_median:
-        print(
-            f"bench_x10: measured job floor {floor:.4f}s > 1.5x trailing "
-            f"median {floor_median:.4f}s — re-measuring",
-            file=sys.stderr,
-        )
-        floor = min(floor, _measure_floor())
-        noisy_floor = floor > 1.5 * floor_median
-    # signal 3: median per-query wall drift vs the previous artifact
-    wall_drift = None
-    if prev_queries:
-        drifts = [
-            timings[n] / prev_queries[n]
-            for n in timings
-            if n in prev_queries and prev_queries[n] > 0
-        ]
-        if drifts:
-            wall_drift = round(statistics.median(drifts), 3)
-    noisy_wall = wall_drift is not None and wall_drift > 1.5
-
-    con = duckdb.connect()
-    for t in sorted(tables):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        # Spark-written tables are DIRECTORIES of part files
-        src = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-    oracle_timings: dict[str, float] = {}
-    for name in names:
-        sql = oracles[name]
-        con.execute(sql).fetchall()  # warm
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        oracle_timings[name] = round(best, 4)
-        print(f"duckdb {name}: {best:.4f}s", file=sys.stderr, flush=True)
-
-    # signal 2: the oracle denominator vs trailing clean artifacts.
-    # Identical SQL over identical data — any large drift is the box,
-    # and a slow denominator flatters ratio_total (r12's 0.173).
-    oracle_total = round(sum(oracle_timings.values()), 3)
-    oracle_median_trailing = (
-        statistics.median(trailing_oracle) if trailing_oracle else None
-    )
-    noisy_oracle = (
-        oracle_median_trailing is not None
-        and oracle_total > 1.5 * oracle_median_trailing
-    )
-    noisy = noisy_floor or noisy_oracle or noisy_wall
-    if noisy:
-        print(
-            f"bench_x10: NOISY RUN (floor={noisy_floor} "
-            f"oracle={noisy_oracle} wall={noisy_wall}) — do not read "
-            "round-over-round deltas off this artifact",
-            file=sys.stderr,
-        )
+    floor = guard["job_floor_s"]
 
     ratio = {
         n: (round(timings[n] / o, 2) if o > 0 else None)
@@ -319,18 +180,30 @@ def main() -> int:
         n: (round(max(timings[n] - floor, 0.0) / o, 2) if o > 0 else None)
         for n, o in oracle_timings.items()
     }
-    # the done-bar population: queries whose oracle is big enough to
-    # measure against (>= 0.1 s at x10); write-priced queries get
-    # their own bin — their Spark side does physical I/O the oracle
-    # doesn't, so the ratio prices the write, not the plan
+    # The done-bar population: queries whose oracle is big enough to
+    # measure against (>= 0.1 s at x10); write-priced queries get their
+    # own bin — their Spark side does physical I/O the oracle doesn't,
+    # so the ratio prices the write, not the plan.
     # Denominator-robust bin membership: each query's oracle seconds
-    # pinned to the median of (trailing clean artifacts + this run) so
-    # one contended DuckDB pass can't churn the list (r14 hygiene;
-    # `ratio`/`floor_adj_ratio` below stay on this run's denominator —
-    # the pinned value only decides the bins).
-    oracle_pinned = {}
-    for n, o in oracle_timings.items():
-        oracle_pinned[n] = statistics.median(trailing_oracle_q.get(n, []) + [o])
+    # pinned to the median of (prior CLEAN artifacts + this run), so one
+    # contended DuckDB pass can't churn the list (VERDICT r13 'What's
+    # wrong #3'; `ratio`/`floor_adj_ratio` stay on this run's
+    # denominator — the pinned value only decides the bins).
+    trailing_oracle_q: dict[str, list[float]] = {}
+    for d in history:
+        oq = d.get("oracle_queries")
+        if (
+            isinstance(d.get("oracle_total"), (int, float))
+            and not d.get("noisy_run")
+            and isinstance(oq, dict)
+        ):
+            for n, val in oq.items():
+                if isinstance(val, (int, float)):
+                    trailing_oracle_q.setdefault(n, []).append(float(val))
+    oracle_pinned = {
+        n: statistics.median(trailing_oracle_q.get(n, []) + [o])
+        for n, o in oracle_timings.items()
+    }
     measurable = {n for n, o in oracle_pinned.items() if o >= 0.1}
     over = {
         n for n in measurable
@@ -351,16 +224,8 @@ def main() -> int:
         "ratio_total": round(
             sum(timings.values()) / sum(oracle_timings.values()), 3
         ),
+        **guard,
         "job_floor_s": round(floor, 4),
-        "floor_median_trailing": floor_median,
-        "oracle_median_trailing": oracle_median_trailing,
-        "wall_drift_median": wall_drift,
-        "noisy_run": noisy,
-        "noisy_signals": {
-            "floor": noisy_floor,
-            "oracle": noisy_oracle,
-            "wall": noisy_wall,
-        },
         "n_measurable": len(measurable),
         "over_2x_measurable": over_bar,
         "over_2x_write_priced": over_write,

@@ -2,57 +2,33 @@
 """Time the DuckDB oracle SQL for the headline queries at a given SF dir.
 
 Prints one JSON line {"oracle_total": sec, "queries": {...}} — the
-denominator for the bench-vs-oracle ratio the judge grades.
+denominator for the bench-vs-oracle ratio the judge grades, under
+bench.py's oracle protocol (warm + min of 2).
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> None:
-    import duckdb
-
-    from bench import HEADLINE
-    from data_feature_extraction_and_retrieval_pipeline_spark import queries as Q
+    from bench import HEADLINE, SF_DIR, oracle_connection, oracle_seconds
+    from data_feature_extraction_and_retrieval_pipeline_spark import (
+        queries as Q,
+        schemas,
+    )
 
     oracles = Q.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        sql = oracles.get(name)
-        if sql is None:
-            continue
-        con.execute(sql).fetchall()  # warm
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        timings[name] = round(best, 4)
-
+    con = oracle_connection(SF_DIR, schemas.TABLES)
+    timings = {
+        name: round(oracle_seconds(con, oracles[name]), 4)
+        for name in HEADLINE
+        if name in oracles
+    }
     print(
         json.dumps(
             {
