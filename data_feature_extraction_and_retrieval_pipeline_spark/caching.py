@@ -12,7 +12,9 @@ query execution and the storage memory fills with dead blocks.
 the harness (bench.py, tools/check_correctness.py, or any caller that
 drives queries to completion) calls ``release()`` after materializing
 a result to drop intra-query caches while leaving long-lived table
-caches (``sources.readers``) untouched.
+caches (``sources.readers``) untouched. Every registry call constructs
+a fresh plan with fresh persists, so the ledger holds only the frames
+of queries constructed and not yet released.
 """
 
 from __future__ import annotations
@@ -51,15 +53,6 @@ def current_scope() -> str | None:
     already owns the release lifecycle of its persists."""
     return getattr(_SCOPE, "name", None)
 
-# Set by queries.enable_plan_cache: when prepared plans are live, a
-# released persist must be re-MARKED (Spark's cache manager keys the
-# marking on the logical plan; unpersist deregisters it, and the next
-# execution of the prepared plan would silently recompute its
-# multi-consumer intermediate once per consumer). Re-persisting keeps
-# the marking with zero retained blocks — every run still recomputes
-# from the scans, so no run ever reads blocks a prior run materialized.
-RETAIN_ON_RELEASE = False
-
 
 def persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for later :func:`release`."""
@@ -69,26 +62,31 @@ def persist(df: DataFrame) -> DataFrame:
     return out
 
 
-# JVM-side unpersist failures swallowed by :func:`unpersist` — kept
-# observable (count + last message) instead of silently dropped
-# (ADVICE r13); read it in tests or a debugging session.
+# JVM-side unpersist failures swallowed by :func:`unpersist` and
+# :func:`release` — kept observable (count + last message) instead of
+# silently dropped (ADVICE r13); read it in tests or a debugging
+# session.
 UNPERSIST_ERRORS: dict[str, object] = {"count": 0, "last": None}
 
 
 def unpersist(df: DataFrame) -> None:
-    """Unpersist ``df`` and REMOVE it from the ledger (vs
-    :func:`release`, which under prepared-plan mode re-marks the frame
-    so the next run caches it again). For persists whose multi-consumer
-    phase is OVER at plan-construction time — e.g. a stage input whose
-    second consumer was an eagerly-checkpointed pair-mining pass: after
-    the checkpoint the only remaining consumer should stream the chain
-    directly instead of paying a cache materialization every run.
+    """Unpersist ``df`` and remove it from the ledger now, at plan
+    construction, rather than at the harness's :func:`release`. For
+    persists whose multi-consumer phase is OVER at plan-construction
+    time — e.g. a stage input whose second consumer was an
+    eagerly-checkpointed pair-mining pass: after the checkpoint the
+    only remaining consumer should stream the chain directly instead
+    of paying a cache materialization on execution.
 
     Only call this on frames whose EVERY registered consumer is
     finished: the ledger is keyed by object identity, so unpersisting
     a frame another scope still counts on silently drops that scope's
     entry."""
     _LIVE[:] = [(live, sc) for live, sc in _LIVE if live is not df]
+    _unpersist_counted(df)
+
+
+def _unpersist_counted(df: DataFrame) -> None:
     try:
         df.unpersist(blocking=False)
     except Exception as exc:
@@ -97,23 +95,15 @@ def unpersist(df: DataFrame) -> None:
 
 
 def release(only: str | None = None) -> int:
-    """Drop the data blocks of tracked intra-query caches.
-
-    With ``RETAIN_ON_RELEASE`` (prepared-plan mode) the frames stay in
-    the ledger re-marked for caching, so the next execution caches its
-    intermediates again and the blocks are dropped again after it; the
-    ledger is bounded by the number of prepared plans. Otherwise the
-    ledger empties (one-shot harness runs). Returns the released count.
+    """Unpersist tracked intra-query caches and empty their ledger
+    entries; returns the released count.
 
     ``only`` restricts the pass to frames persisted under
     :func:`scope` ``only`` — the harness calls ``release(name)`` after
     executing query ``name`` so each release pays for that query's
-    frames, not the whole ledger. This matters in prepared-plan mode:
-    every unpersist+re-persist round-trips the JVM cache manager and
-    re-compiles the frame's InMemoryRelation physical plan, which for
-    deep chained plans (the CurationPipeline stages) costs seconds —
-    a full-ledger release after every timed run turned the bench loop
-    into minutes of cache-manager churn.
+    frames, not the whole ledger, and other queries' entries survive.
+    A failed unpersist is counted in ``UNPERSIST_ERRORS`` (its entry
+    still leaves the ledger).
     """
     n = 0
     survivors: list[tuple[DataFrame, str | None]] = []
@@ -128,12 +118,6 @@ def release(only: str | None = None) -> int:
             survivors.append((df, sc))
             continue
         n += 1
-        try:
-            df.unpersist(blocking=False)
-            if RETAIN_ON_RELEASE:
-                df.persist()
-                survivors.append((df, sc))
-        except Exception:
-            pass
+        _unpersist_counted(df)
     _LIVE[:] = survivors
     return n

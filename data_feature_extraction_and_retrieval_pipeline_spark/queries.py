@@ -63,25 +63,18 @@ _ORACLES: dict[str, str] = {}
 # lazily-executed scan is mid-collect) and ACROSS threads: the
 # _SIDE_EFFECT_LOCK serializes the write itself, but the read-back
 # DataFrame executes lazily AFTER the lock is released, so two
-# threads plan-cache-missing the same roundtrip query on one shared
-# dir could still overwrite (mode=overwrite deletes files first)
-# while the other thread's scan is running. Per-thread dirs make the
+# threads constructing the same roundtrip query on one shared dir
+# could still overwrite (mode=overwrite deletes files first) while
+# the other thread's scan is running. Per-thread dirs make the
 # overwrite race structurally impossible: the only writer of a dir is
 # the thread that also runs its reads.
 #
-# Retired threads' dirs ARE reaped (round 7) — but ONLY while the
-# plan cache is OFF: with the cache ON, a cached DataFrame built by
-# thread T keeps referencing T's dir and may be re-executed from ANY
-# thread long after T exits (bench.py builds plans on a 4-thread
-# pool, then times them from the main thread), so reap-on-thread-
-# death would delete files under a live plan's scan. Cache OFF is the
-# resident-server regime the reap exists for: every call constructs,
-# executes, and discards its frame on ONE worker thread, so a retired
-# thread's dirs are unreferenced by construction and rotating worker
-# threads no longer accumulate one roundtrip dir per retired thread.
-# (A caller that constructs cache-OFF on one thread and lazily
-# executes on another is outside this contract — use the plan cache
-# or a bounded pool for cross-thread handoff.)
+# Retired threads' dirs are reaped (round 7): every caller constructs,
+# executes and discards its frame on ONE thread, so a retired thread's
+# dirs are unreferenced and rotating worker threads do not accumulate
+# one roundtrip dir per retired thread. (A caller that constructs on
+# one thread and lazily executes on another after the first exits is
+# outside this contract.)
 # The lock remains to serialize catalog/warehouse side effects (the
 # bucketed managed table below) and to bound concurrent write jobs
 # during the bench's overlapped cold pass.
@@ -142,14 +135,9 @@ def _thread_token() -> int:
 
 
 def _reap_retired_tokens() -> None:
-    """Reclaim scratch dirs whose constructing thread has exited.
-    No-op while the plan cache is on (cached plans built by a retired
-    thread legitimately re-execute from other threads — their dirs
-    must outlive the thread; atexit still cleans them)."""
+    """Reclaim scratch dirs whose constructing thread has exited."""
     import shutil
 
-    if _PLAN_CACHE_ON:
-        return
     with _SCRATCH_BOOK_LOCK:
         dead = [
             tok
@@ -216,58 +204,14 @@ def _scratch_dir(prefix: str, sf_dir: str) -> str:
         _DIRS_BY_TOKEN.setdefault(tok, set()).add(d)
     return d
 
-# Prepared-plan cache: a query over the immutable driver tables is a
-# deterministic function of (session, sf_dir), and building its
-# DataFrame costs ~0.1-0.7 s of py4j round-trips + Catalyst analysis
-# PER CALL — the dominant fixed cost of a resident serving process that
-# re-plans every request. A prepared statement builds once and
-# re-executes. Each call returns ``cached.select("*")``, NOT the cached
-# frame itself: a fresh QueryExecution (fresh RDD DAG, fresh shuffles,
-# fresh broadcast builds) over the already-built JVM-side tree, so no
-# run ever reuses a prior run's shuffle outputs or broadcast results —
-# only the plan construction is amortized, never the data work.
-# Opt-in (bench.py / serving paths); default off so tests exercise
-# fresh plan construction.
-_PLAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_PLAN_CACHE_ON = False
-
-
-def enable_plan_cache(enabled: bool = True) -> None:
-    from . import caching
-
-    global _PLAN_CACHE_ON
-    _PLAN_CACHE_ON = enabled
-    caching.RETAIN_ON_RELEASE = enabled
-    if not enabled:
-        _PLAN_CACHE.clear()
-
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             from . import caching
 
-            if not _PLAN_CACHE_ON:
-                with caching.scope(name):
-                    return fn(spark, sf_dir)
-            key = (id(spark), sf_dir.rstrip("/"), name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                # evict dead-session plans (same liveness pruning as
-                # the table/index caches) before adding a new one
-                for k, old_df in list(_PLAN_CACHE.items()):
-                    try:
-                        alive = (
-                            old_df.sparkSession.sparkContext._jsc is not None
-                        )
-                    except Exception:
-                        alive = False
-                    if not alive:
-                        _PLAN_CACHE.pop(k, None)
-                with caching.scope(name):
-                    df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df.select("*")
+            with caching.scope(name):
+                return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
@@ -300,8 +244,9 @@ _DRIVER_ORDER: list[str] = [
     # queries are at floor 15 for the sizes-in-postings plan): the pair-mining
     # repartition + Generate-edge label propagation, the dup-injection
     # fixture Generates, the single-reference stopword/hash-split
-    # expression fixes, the leveled salted-funnel chains, and the
-    # curate chain that composes them --
+    # expression fixes, the leveled salted-funnel chains (the two
+    # plain funnel queries re-witnessed beside their facade twin), and
+    # the curate chain that composes them --
     "dedup_ngram_jaccard",
     "dedup_cluster_canonical",
     "dedup_exact",
@@ -319,6 +264,8 @@ _DRIVER_ORDER: list[str] = [
     "dedup_keep_best_per_source",
     "api_pipeline_curate",
     "api_events_funnel",
+    "events_funnel",
+    "events_funnel_windowed",
     # -- stalest oracled witnesses: the r11-newest keepers not
     # re-certified since (VERDICT r13 item 7) --
     "sql_api_revenue",
@@ -490,7 +437,7 @@ _TOUCHED: dict[str, int] = {
     "asof_join_clicks": 9,
     # round 10: step-type filter pushed below the funnel shuffle
     # (plan change, values identical); salted= fallback implemented
-    "events_funnel_windowed": 10,
+    "events_funnel_windowed": 15,  # r15: re-witnessed beside api_events_funnel
     "events_retention_stream": 10,
     "ann_ingest_pq": 7,
     # round 10: register() now auto-upgrades expr→join past the
@@ -501,7 +448,7 @@ _TOUCHED: dict[str, int] = {
     # query semantics), and the F18 display-truncation function
     "retrieval_rrf_fusion": 12,  # r12: union-agg fusion + literal BM25 stats
     "etl_display_truncate": 8,
-    "events_funnel": 10,  # r10: isin prefilter below the shuffle
+    "events_funnel": 15,  # r15: re-witnessed beside api_events_funnel
     "agg_pivot_roundtrip": 7,
     "win_ntile_quartiles": 7,
     # round 6 second half: layout-correct stream sources (the

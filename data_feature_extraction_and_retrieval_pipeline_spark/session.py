@@ -14,6 +14,10 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+# spark.shuffle.sort.bypassMergeThreshold: 0 forces the sort-based
+# shuffle writer at every reduce count (see get_spark)
+_BYPASS_THRESHOLD = "0"
+
 
 def get_spark(
     app_name: str = "dferp-spark",
@@ -69,13 +73,8 @@ def get_spark(
         # repartition, r13). The sort-based writer emits one file per
         # map task at any reduce count and only sorts by partition id,
         # and it is already what every >200-partition cluster shuffle
-        # uses — so this is scale-neutral, not a local tune. Env
-        # override for deployments that want the bypass path back
-        # (very small reduce counts with LARGE per-task output).
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_BYPASS", "0"),
-        )
+        # uses — so this is scale-neutral, not a local tune.
+        .config("spark.shuffle.sort.bypassMergeThreshold", _BYPASS_THRESHOLD)
     )
     active = SparkSession.getActiveSession()
     if active is None:
@@ -84,26 +83,25 @@ def get_spark(
         # getOrCreate() attaches to the running session and every
         # builder conf above is silently ignored — in particular the
         # shuffle-writer threshold is a STATIC core conf that cannot
-        # change after SparkContext start, so a second caller's
-        # SPARK_GRAFT_SHUFFLE_BYPASS override would not take effect.
-        # Surface the mismatch instead of hiding it (ADVICE r13).
-        # Compared as numbers ("0" and "00" are the same threshold).
-        # warnings.warn's default filter reports a given mismatch once
-        # per process, not on every attach.
-        want = os.environ.get("SPARK_GRAFT_SHUFFLE_BYPASS", "0")
+        # change after SparkContext start, so a session started
+        # elsewhere keeps its own writer. Surface the mismatch instead
+        # of hiding it (ADVICE r13). Compared as numbers ("0" and "00"
+        # are the same threshold). warnings.warn's default filter
+        # reports a given mismatch once per process, not on every
+        # attach.
         try:
             have = active.sparkContext.getConf().get(
                 "spark.shuffle.sort.bypassMergeThreshold", "200"
             )
-            differs = int(have) != int(want)
+            differs = int(have) != int(_BYPASS_THRESHOLD)
         except Exception:
             differs = False
         if differs:
             warnings.warn(
                 "get_spark: attaching to an active session whose "
                 f"spark.shuffle.sort.bypassMergeThreshold={have} differs "
-                f"from the requested {want}; the static conf cannot be "
-                "changed mid-session"
+                f"from the requested {_BYPASS_THRESHOLD}; the static conf "
+                "cannot be changed mid-session"
             )
     if extra_conf:
         for k, v in extra_conf.items():

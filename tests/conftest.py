@@ -20,6 +20,17 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session", autouse=True)
+def no_swallowed_unpersist_errors():
+    """The caching module swallows JVM-side unpersist failures so a
+    harness can go on, but counts them; a clean test session has
+    none."""
+    yield
+    from data_feature_extraction_and_retrieval_pipeline_spark import caching
+
+    assert caching.UNPERSIST_ERRORS["count"] == 0, caching.UNPERSIST_ERRORS
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -733,7 +733,6 @@ def test_bypass_threshold_warning_numeric_and_once(monkeypatch):
     monkeypatch.setattr(SparkSession, "getActiveSession", lambda: _Active)
     # attach without touching the real session's runtime confs
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: None)
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_BYPASS", "0")
     with warnings.catch_warnings(record=True) as seen:
         warnings.simplefilter("default")  # the shipped filter: once
         session.get_spark()

@@ -1,9 +1,10 @@
 """bench.py's run-conditions guard and its history, as pure functions
-(no Spark session)."""
+(no Spark session), and its per-query measurement on a stub query."""
 
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 
@@ -121,3 +122,25 @@ def test_history_matches_config_and_excludes_current_round(tmp_path, monkeypatch
 
     sf_history = bench.trailing_artifacts("BENCH_r*.json", sf=0.1, cpus=4)
     assert [d["job_floor_s"] for d in sf_history] == [0.3]
+
+
+def test_measure_query_times_execution_of_a_fresh_plan(spark):
+    """Every run builds a fresh plan before its timer and outside its
+    job group: a construction that sleeps and runs one Spark job shows
+    in the warm run's construct layer, not in the timed seconds, and
+    its job is in no run's job count."""
+    built = []
+
+    def stub(spark, sf_dir):
+        time.sleep(0.5)
+        spark.range(0, 10, 1, 1).count()  # a construction-time job
+        built.append(sf_dir)
+        return spark.range(0, 100, 1, 2)  # collect: one job
+
+    rec, _ = bench.measure_query(spark, stub, "stub_dir", "stub_query")
+    assert built == ["stub_dir"] * 4  # warm run + three timed runs
+    assert rec["layers"]["construct_s"] >= 0.5
+    assert rec["seconds"] < 0.5
+    assert rec["jobs"] == 1
+    assert rec["layers"]["jobs"] == 1
+    assert rec["rows_out"] == 100 and not rec["failures"]

@@ -12,7 +12,8 @@ operating point:
   cluster/bucket column is a write-time partition key and the probe
   is partition pruning),
 - mean warm per-query wall time through the REAL Spark operators
-  (operators/similarity.py), resident index frames, plan cache off.
+  (operators/similarity.py) over resident index frames; each frame
+  is built and collected once untimed, then its re-collect is timed.
 
 TWO corpora, because recall is a property of data structure, not just
 of the index:

@@ -5,9 +5,9 @@ Runs ``bench.measure_query`` on each named query after the bench's
 resident warm-up and prints one JSON record per query: the min of 3
 timed runs, the last run's job count, rows out, and the untimed warm
 run split into construct, analyze, optimize, physical plan and
-execute+fetch seconds with its jobs, stages and tasks. The warm run is
-the query's first call, so construct is the full plan construction
-(eager checkpoints and first-use index builds included).
+execute+fetch seconds with its jobs, stages and tasks. Every run
+builds a fresh plan, and the warm run is the query's first call here,
+so its construct also holds first-use index builds.
 
 Covers the sf0.1 fixture at $SPARK_GRAFT_SF_DIR with the bench.py
 session, or the x-N synth fixture with the bench_x10.py session.
